@@ -21,6 +21,7 @@ from streaming_algorithms_spark.sketches import (
     P2Histogram,
     P2Quantile,
     RunningStats,
+    SpaceSaving,
     TDigest,
     TimeSeries,
     matrix_profile,
@@ -61,6 +62,32 @@ def main():
     out["cms_update_hashes"], _ = rate(
         n, cms2.update_hashes, h,
         warmup=lambda: CountMinSketch(1e-5, 0.01).update_hashes(h))
+
+    # Space-Saving: update_batch over the per-Arrow-batch (distinct key,
+    # count) summaries the space_saving_topk operator feeds it.  Gate shape
+    # (space_saving_customers at sf0.1): k=4096 over 150k customer keys,
+    # ~10k distinct, in 65,536-row batches; token shape: k=256 over 100k
+    # Zipf tokens.  Rate = raw rows per second; batch summaries prebuilt.
+    def ss_batches(keys, rows=65_536):
+        return [np.unique(np.array(keys[i:i + rows], dtype=object),
+                          return_counts=True)
+                for i in range(0, len(keys), rows)]
+
+    def ss_feed(k, batches):
+        sk = SpaceSaving(k)
+        for uniq, cnt in batches:
+            sk.update_batch(list(uniq), cnt)
+
+    ss_rng = np.random.default_rng(7)
+    for name, k, keys in (
+        ("space_saving_update_batch_k4096_gate", 4096,
+         [str(x).encode() for x in ss_rng.integers(1, 10_001, 150_000)]),
+        ("space_saving_update_batch_k256_zipf", 256,
+         [f"t{z}".encode() for z in np.minimum(ss_rng.zipf(1.1, 100_000), 50_000)]),
+    ):
+        batches = ss_batches(keys)
+        out[name], _ = rate(len(keys), ss_feed, k, batches,
+                            warmup=lambda: ss_feed(k, batches[-1:]))
 
     # P2 quantile/histogram: 200k adds (test_p2.c:239-274) — sequential
     # parity mode (the distributed path is KLL/t-digest)

@@ -4,7 +4,9 @@
 Runs selected gated queries with the Spark event log enabled, then parses
 the log into (job, duration, description) rows plus the driver-side gaps
 between jobs — the measurement §1 step: where does each query's wall time
-actually go (jobs vs scheduler/driver overhead)?
+actually go (jobs vs scheduler/driver overhead)?  Jobs of one query may
+overlap, so its critical path is the union of its job intervals, not their
+sum, and the driver gap (wall - critical path) is never negative.
 
 Usage: PYTHONPATH=/root/repo python scripts/profile_queries.py q1 q2 ...
 """
@@ -18,6 +20,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.eventlog import union_ms  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 EVLOG = "/tmp/spark_graft_evlog"
@@ -124,15 +128,17 @@ def main() -> None:
                      if j["desc"] == tag and "end" in j),
                     key=lambda j: j["start"])
         wall = t1 - t0
-        jsum = sum(j["end"] - j["start"] for j in js)
+        crit = union_ms([(j["start"], j["end"]) for j in js], t0, t1)
         print(f"\n=== {name} sample {s}: wall {wall:.3f}s, "
-              f"{len(js)} jobs sum {jsum:.3f}s, driver-gap {wall - jsum:.3f}s")
+              f"{len(js)} jobs critical path {crit:.3f}s, "
+              f"driver-gap {wall - crit:.3f}s")
         prev_end = t0
         for i, j in enumerate(js):
-            gap = j["start"] - prev_end
+            # a job starting before the previous ones ended overlaps: no gap
+            gap = max(j["start"] - prev_end, 0.0)
             print(f"  job{i:3d} +{gap:6.3f}s gap | {j['end']-j['start']:6.3f}s "
                   f"run | {j['stages']} stages {j['tasks']} tasks | {j['site']}")
-            prev_end = j["end"]
+            prev_end = max(prev_end, j["end"])
         print(f"  tail gap {t1 - prev_end:6.3f}s")
 
 

@@ -59,6 +59,15 @@ def encode_utf8(series: pd.Series) -> np.ndarray:
     return series.astype(str).str.encode("utf-8").to_numpy()
 
 
+def distinct_utf8(series: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """(distinct values as ``encode_utf8`` bytes, their counts): factorize
+    the column (pandas C hash table), count with bincount, and encode only
+    the uniques.  Same multiset of (bytes, count) as encoding every row."""
+    codes, uniq = pd.factorize(series.astype(str), use_na_sentinel=False)
+    return (encode_utf8(pd.Series(uniq, dtype=object)),
+            np.bincount(codes, minlength=len(uniq)))
+
+
 def _parse_size(s: str) -> int:
     """'128m' / '134217728b' / '4MB' -> bytes."""
     s = str(s).strip().lower()
@@ -711,15 +720,21 @@ def space_saving_topk(df: DataFrame, keys: Sequence[str], col: str,
                       top_k: int = 10, k_counters: int = 256) -> DataFrame:
     """Bounded-memory heavy hitters via mergeable Space-Saving — the
     reference workload's `sparse` subtype (heka_message_monitor.lua:562-590)
-    with the Metwally guarantee: items with count > N/k are always reported;
-    per-item bounds [hi - err, hi] ride along."""
+    with the Metwally guarantee over the N non-null rows of a group: every
+    item with count > N/k_counters is tracked, and each reported item
+    carries count_lo <= true count <= count_hi.  The output is the top_k
+    tracked items by (-count_hi, item), so with top_k >= k_counters every
+    item above N/k_counters is reported.
+
+    Per Arrow batch the column is factorized, each distinct value is
+    utf-8 encoded once, and the batch's exact (value, count) summary is
+    combined into the partial — the same combine that merges partials
+    (sketches/space_saving.py), O((k+u) log(k+u)) for u distinct values."""
 
     df = df.filter(F.col(col).isNotNull())
 
     def update(sk: SpaceSaving, pdf: pd.DataFrame) -> None:
-        vals = encode_utf8(pdf[col])
-        uniq, cnt = np.unique(vals, return_counts=True)
-        sk.update_batch(list(uniq), cnt)
+        sk.update_batch(*distinct_utf8(pdf[col]))
 
     def finalize(sk: SpaceSaving, rows: int) -> dict:
         top = sk.top_k(top_k)
@@ -764,8 +779,7 @@ def cms_heavy_hitters(df: DataFrame, keys: Sequence[str], col: str,
             self.cms = CountMinSketch(epsilon, delta)
             self.cand: dict[bytes, int] = {}
 
-        def update(self, vals: np.ndarray) -> None:
-            uniq, cnt = np.unique(vals, return_counts=True)
+        def update(self, uniq: np.ndarray, cnt: np.ndarray) -> None:
             self.cms.update_batch(list(uniq), cnt)
             for v, c in zip(uniq, cnt):
                 self.cand[v] = self.cand.get(v, 0) + int(c)
@@ -818,7 +832,7 @@ def cms_heavy_hitters(df: DataFrame, keys: Sequence[str], col: str,
     df = df.filter(F.col(col).isNotNull())
 
     def update(sk: _HH, pdf: pd.DataFrame) -> None:
-        sk.update(encode_utf8(pdf[col]))
+        sk.update(*distinct_utf8(pdf[col]))
 
     def finalize(sk: _HH, rows: int) -> dict:
         cand = list(sk.cand.items())

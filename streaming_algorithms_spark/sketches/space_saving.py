@@ -5,9 +5,20 @@ overflow, max 255 values — a decayed variant of the same idea).
 
 Guarantees with k counters over N items: every item with true count > N/k is
 tracked, and each tracked count overestimates by at most its stored error
-(count - error <= true <= count).  Merge: sum counts/errors of shared keys,
-carry the min-count offset for unseen keys, trim to k — preserves the
-N_total/k error bound (Agarwal et al., "Mergeable Summaries", PODS 2012).
+(count - error <= true <= count).
+
+One combine serves update and merge (Agarwal et al., "Mergeable Summaries",
+PODS 2012).  A side's offset is its min count when full (k keys), else 0: it
+bounds the true count of every key that side does not track.  Shared keys
+sum counts and errors; a key only one side has gets the other side's offset
+added to both; the union is trimmed to the top k by (-count, key).
+``update_batch`` combines the batch's exact summary (offset 0), ``merge``
+the other sketch.  Invariant sum(counts) <= N: each key the trim drops had a
+count >= this side's offset m, and each key entering from the other side
+enters at m + its count, so the dropped key pays for it.  Hence min <= N/k,
+and as an untracked item's true count is at most min, every item above N/k
+stays tracked.  Cost per batch of u distinct keys: one sort of <= k + u
+keys, O((k+u) log(k+u)).
 """
 
 from __future__ import annotations
@@ -24,30 +35,37 @@ class SpaceSaving:
         self.errors: dict[bytes, int] = {}
         self.n = 0
 
-    def _min_key(self):
-        return min(self.counts.items(), key=lambda kv: kv[1])[0]
+    def _offset(self) -> int:
+        return min(self.counts.values()) if len(self.counts) >= self.k else 0
+
+    def _combine(self, keys, counts, errors, offset: int) -> None:
+        """Combine a summary (its keys may repeat) whose untracked keys are
+        bounded by ``offset`` into this one; keep the top k."""
+        m = len(self.counts)
+        union = np.empty(m + len(keys), object)
+        union[:m], union[m:] = list(self.counts), keys
+        uniq, inv = np.unique(union, return_inverse=True)  # sorted keys
+        unseen = np.ones((2, len(uniq)), bool)  # [not mine, not theirs]
+        unseen[0, inv[:m]] = unseen[1, inv[m:]] = False
+        pad = self._offset() * unseen[0] + offset * unseen[1]
+        c, e = pad.astype(np.int64), pad.astype(np.int64)
+        for acc, own, other in ((c, self.counts, counts), (e, self.errors, errors)):
+            np.add.at(acc, inv, np.concatenate(
+                [np.fromiter((own[x] for x in self.counts), np.int64, m),
+                 np.asarray(other, np.int64)]))
+        top = np.argsort(-c, kind="stable")[: self.k]  # ties: smaller key
+        kept = uniq[top].tolist()
+        self.counts = dict(zip(kept, c[top].tolist()))
+        self.errors = dict(zip(kept, e[top].tolist()))
 
     def update_batch(self, keys, counts=None) -> None:
         keys = list(keys)
-        if counts is None:
-            counts = np.ones(len(keys), np.int64)
-        # pre-aggregate the batch: one dict op per unique key
-        uniq: dict[bytes, int] = {}
-        for key, c in zip(keys, counts):
-            uniq[key] = uniq.get(key, 0) + int(c)
-        for key, c in uniq.items():
-            self.n += c
-            if key in self.counts:
-                self.counts[key] += c
-            elif len(self.counts) < self.k:
-                self.counts[key] = c
-                self.errors[key] = 0
-            else:
-                victim = self._min_key()
-                base = self.counts.pop(victim)
-                self.errors.pop(victim)
-                self.counts[key] = base + c
-                self.errors[key] = base
+        counts = np.asarray(np.ones(len(keys)) if counts is None else counts, np.int64)
+        if (counts < 0).any():
+            raise ValueError("SpaceSaving is insert-only: negative count in "
+                             "update_batch would break count - error <= true")
+        self.n += int(counts.sum())
+        self._combine(keys, counts, np.zeros_like(counts), 0)
 
     def estimate(self, key: bytes):
         """(upper_bound, guaranteed_min) or None if untracked."""
@@ -63,26 +81,8 @@ class SpaceSaving:
     def merge(self, other: "SpaceSaving") -> "SpaceSaving":
         if self.k != other.k:
             raise ValueError("SpaceSaving k mismatch")
-        # mergeable-summaries combine: unseen keys inherit the other side's
-        # min-count as worst-case offset
-        self_min = min(self.counts.values()) if len(self.counts) >= self.k else 0
-        other_min = min(other.counts.values()) if len(other.counts) >= other.k else 0
-        merged_c: dict[bytes, int] = {}
-        merged_e: dict[bytes, int] = {}
-        for key in set(self.counts) | set(other.counts):
-            if key in self.counts:
-                c1, e1 = self.counts[key], self.errors[key]
-            else:
-                c1, e1 = self_min, self_min
-            if key in other.counts:
-                c2, e2 = other.counts[key], other.errors[key]
-            else:
-                c2, e2 = other_min, other_min
-            merged_c[key] = c1 + c2
-            merged_e[key] = e1 + e2
-        top = sorted(merged_c.items(), key=lambda kv: (-kv[1], kv[0]))[: self.k]
-        self.counts = dict(top)
-        self.errors = {key: merged_e[key] for key, _ in top}
+        self._combine(list(other.counts), list(other.counts.values()),
+                      [other.errors[x] for x in other.counts], other._offset())
         self.n += other.n
         return self
 

@@ -171,3 +171,75 @@ def test_frequent_directions_bound_random_matrices(seed, n_rows, n_parts):
     err = np.linalg.norm(A.T @ A - m.gram(), 2)
     assert err <= m.error_bound() * (1 + 1e-9) + 1e-9
     assert m.n_rows == n_rows
+
+
+def _zipf_stream(seed, n, a):
+    rng = np.random.default_rng(seed)
+    return [f"k{z}".encode() for z in np.minimum(rng.zipf(a, n), 400)], rng
+
+
+def _assert_space_saving_bounds(ss, exact):
+    """The Space-Saving guarantees over the exact counts of everything fed."""
+    n = sum(exact.values())
+    assert ss.n == n
+    assert sum(ss.counts.values()) <= n
+    if len(ss.counts) >= ss.k:
+        assert min(ss.counts.values()) * ss.k <= n
+    for key, hi in ss.counts.items():
+        assert hi - ss.errors[key] <= exact[key] <= hi, (key, exact[key])
+    for key, c in exact.items():
+        if c * ss.k > n:
+            assert key in ss.counts, (key, c, n)
+
+
+def _build_space_saving(keys, k, rng):
+    """Feed ``keys`` in random batches, alternating raw (repeated keys,
+    counts=None) and pre-aggregated input; check the bounds after each."""
+    from collections import Counter
+
+    from streaming_algorithms_spark.sketches import SpaceSaving
+
+    ss, exact = SpaceSaving(k), Counter()
+    cuts = np.sort(rng.integers(0, len(keys) + 1, rng.integers(0, 6)))
+    for batch in np.split(np.array(keys, dtype=object), cuts):
+        if rng.random() < 0.5:
+            ss.update_batch(list(batch))
+        else:
+            uniq, cnt = np.unique(batch, return_counts=True)
+            ss.update_batch(list(uniq), cnt)
+        exact.update(batch.tolist())
+        _assert_space_saving_bounds(ss, exact)
+    return ss, exact
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.integers(0, 2**32 - 1), st.integers(1, 64), st.integers(0, 3000),
+       st.floats(1.05, 2.5))
+def test_space_saving_combine_bounds_per_batch(seed, k, n, a):
+    """Every update_batch is the mergeable combine with the batch's exact
+    summary, so the sequential guarantees hold after every batch."""
+    keys, rng = _zipf_stream(seed, n, a)
+    _build_space_saving(keys, k, rng)
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.integers(0, 2**32 - 1), st.integers(1, 64), st.integers(0, 3000),
+       st.floats(1.05, 2.5), st.integers(2, 5))
+def test_space_saving_merge_and_wire_bounds(seed, k, n, a, n_parts):
+    """Partials over disjoint slices merge (through the wire format) to a
+    summary with the same guarantees over the whole stream."""
+    from collections import Counter
+
+    from streaming_algorithms_spark.sketches import SpaceSaving
+
+    keys, rng = _zipf_stream(seed, n, a)
+    cuts = np.sort(rng.integers(0, n + 1, n_parts - 1))
+    merged, exact = SpaceSaving(k), Counter()
+    for part in np.split(np.arange(n), cuts):
+        ss, ex = _build_space_saving([keys[i] for i in part], k, rng)
+        merged.merge(SpaceSaving.from_bytes(ss.to_bytes()))
+        exact.update(ex)
+        _assert_space_saving_bounds(merged, exact)
+    back = SpaceSaving.from_bytes(merged.to_bytes())
+    assert back.to_bytes() == merged.to_bytes()
+    _assert_space_saving_bounds(back, exact)

@@ -94,6 +94,40 @@ def test_cms_heavy_hitters_vs_exact(spark, webpages):
         assert tok in got_items
 
 
+def test_cms_heavy_hitters_matches_per_token_encoding(spark):
+    """Distinct tokens are encoded once per batch; the counters must equal a
+    CountMinSketch fed every token one by one, so item/est_count/total_count
+    are unchanged.  A narrow sketch (eps=0.02) makes collisions decide the
+    estimates, and < 64 distinct tokens per lang keeps every token a
+    candidate, so the expected answer is the top-k of all point queries."""
+    import pandas as pd
+
+    from streaming_algorithms_spark.operators.sketch_agg import encode_utf8
+    from streaming_algorithms_spark.sketches import CountMinSketch
+
+    rng = np.random.default_rng(11)
+    vocab = ["the", "a", "naïve", "日本", "42", "4.2", "-0.0", "None", ""] + [
+        f"w{i}" for i in range(40)]
+    rows = [(lang, vocab[min(int(z), len(vocab)) - 1])
+            for lang in ("en", "de")
+            for z in rng.zipf(1.3, 3000)]
+    tokens = spark.createDataFrame(rows, "lang string, token string").repartition(3)
+    top_k, eps = 5, 0.02
+    got = {}
+    for r in cms_heavy_hitters(tokens, ["lang"], "token", top_k=top_k,
+                               epsilon=eps).collect():
+        got.setdefault(r["lang"], []).append(
+            (r["item"], r["est_count"], r["total_count"]))
+    for lang in ("en", "de"):
+        toks = pd.Series([t for lg, t in rows if lg == lang], dtype=object)
+        cms = CountMinSketch(eps, 0.01)
+        cms.update_batch(list(encode_utf8(toks)))
+        uniq = sorted(set(toks))
+        est = [int(e) for e in cms.point_query_batch([u.encode() for u in uniq])]
+        want = sorted(zip(uniq, est), key=lambda t: (-t[1], t[0]))[:top_k]
+        assert got[lang] == [(u, e, cms.item_count) for u, e in want]
+
+
 def test_bloom_prefilter_semi_join(spark, webpages):
     seen = webpages.filter(F.col("lang") == "en").select("url").distinct()
     bloom = bloom_build(seen, "url", capacity=max(seen.count(), 10), fpr=1e-6)

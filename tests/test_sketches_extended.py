@@ -99,6 +99,15 @@ def test_space_saving_merge_preserves_bound():
     assert back.top_k(5) == merged.top_k(5)
 
 
+def test_space_saving_negative_count_fails_loudly():
+    ss = SpaceSaving(k=4)
+    ss.update_batch([b"a", b"b"], [3, 1])
+    before = ss.to_bytes()
+    with pytest.raises(ValueError, match="negative count"):
+        ss.update_batch([b"a", b"c"], [2, -1])
+    assert ss.to_bytes() == before  # rejected before touching the summary
+
+
 # --------------------------------------------------------------------------
 # Cuckoo filter
 # --------------------------------------------------------------------------
