@@ -6,18 +6,20 @@ script; SURVEY §3 EP3).  The distributed equivalent required by
 BASELINE.json's north_rule: "resumable from checkpoint with per-partition
 lineage + metrics".
 
-Design: stage 1 writes its partials — one row per (partition, key) —
-to a parquet checkpoint *before* the merge stage:
+Design: stage 1 (``sketch_agg.build_partials``, the one partial builder)
+writes its partials — one row per (partition, key) — to a parquet
+checkpoint *before* the merge stage:
 
-    (query_id, stage, partition_id, key..., sketch BINARY,
-     rows BIGINT, wall_ms DOUBLE)
+    (key..., sketch BINARY, rows BIGINT, partition_id INT,
+     wall_ms DOUBLE, query_id STRING, algo_version STRING)
 
 Resume after executor/driver loss = read the checkpoint, find partitions
-whose partials are missing, re-run stage 1 on ONLY those input partitions,
-union, then merge.  Because sketches are commutative monoids, the resumed
-result is byte-identical to an uninterrupted run (tested in
-tests/test_checkpoint.py with half the checkpoint rows dropped —
-FIXTURES §B3).
+whose partials are missing, re-run stage 1 on ONLY those input partitions
+(completed ones are filtered JVM-side on ``spark_partition_id()`` before
+the Arrow transfer), then merge everything the checkpoint holds.  Because
+sketches are commutative monoids, the resumed result is byte-identical to
+an uninterrupted run (tested in tests/test_checkpoint.py with half the
+checkpoint rows dropped — FIXTURES §B3).
 
 Metrics: rows and wall_ms per partition ride on the lineage rows;
 totals surface via ``lineage_metrics``.
@@ -35,82 +37,14 @@ estimate.
 
 from __future__ import annotations
 
-import time
-from typing import Callable, Sequence
+from typing import Sequence
 
 # bump on ANY change to sketch algorithms / hash mappings / wire formats
 # that makes previously-written partials non-mergeable with new ones
 ALGO_VERSION = "2"
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def build_partials_with_lineage(df: DataFrame, keys: Sequence[str],
-                                factory: Callable[[], object],
-                                update: Callable[[object, pd.DataFrame], None],
-                                query_id: str,
-                                skip_partitions: frozenset = frozenset()) -> DataFrame:
-    """Stage 1 with lineage columns; optionally skips already-checkpointed
-    partitions (the resume path).
-
-    The skip filter runs JVM-side (a Catalyst NOT IN on the partition-id
-    column), so completed partitions' rows are pruned before the Arrow
-    transfer — on resume, stage-1 I/O is proportional to the MISSING
-    partitions only, not a full re-scan shipped to Python just to be
-    discarded.  The Python-side `pid in skip` check stays as a belt-and-
-    braces guard (it is what makes the contract independent of where Spark
-    evaluates the filter)."""
-    from .operators.sketch_agg import _key_schema
-
-    keys = list(keys)
-    key_schema = _key_schema(df, keys)
-    out_schema = (key_schema + ", " if keys else "") + (
-        "sketch binary, rows bigint, partition_id int, wall_ms double, "
-        "query_id string, algo_version string"
-    )
-    df = df.withColumn("_pid", F.spark_partition_id())
-    skip = skip_partitions
-    if skip:
-        df = df.filter(~F.col("_pid").isin(*[int(p) for p in skip]))
-
-    def gen(batches):
-        t0 = time.perf_counter()
-        acc: dict[tuple, object] = {}
-        rows: dict[tuple, int] = {}
-        pid = -1
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["_pid"].iloc[0])
-            if pid in skip:
-                continue
-            if keys:
-                for kv, sub in pdf.groupby(keys, sort=False, dropna=False):
-                    k = kv if isinstance(kv, tuple) else (kv,)
-                    sk = acc.get(k)
-                    if sk is None:
-                        sk = acc[k] = factory()
-                        rows[k] = 0
-                    update(sk, sub)
-                    rows[k] += len(sub)
-            else:
-                sk = acc.get(())
-                if sk is None:
-                    sk = acc[()] = factory()
-                    rows[()] = 0
-                update(sk, pdf)
-                rows[()] += len(pdf)
-        wall_ms = (time.perf_counter() - t0) * 1000
-        cols = [*keys, "sketch", "rows", "partition_id", "wall_ms",
-                "query_id", "algo_version"]
-        recs = [(*k, sk.to_bytes(), rows[k], pid, wall_ms, query_id,
-                 ALGO_VERSION)
-                for k, sk in acc.items()]
-        yield pd.DataFrame(recs, columns=cols)
-
-    return df.mapInPandas(gen, out_schema)
 
 
 class SketchCheckpoint:
@@ -170,35 +104,31 @@ class SketchCheckpoint:
 
     def run(self, df: DataFrame, keys: Sequence[str], factory, update,
             from_bytes, finalize, out_value_schema: str,
-            fail_partitions: frozenset = frozenset(),
-            completed: frozenset | None = None) -> DataFrame:
+            fail_partitions: frozenset = frozenset()) -> DataFrame:
         """Full job: stage-1 partials -> checkpoint parquet -> merge.
 
         ``fail_partitions`` simulates executor loss for tests: those
-        partitions' partials are withheld from the checkpoint write.
-        ``completed``: a caller-supplied survivor set from an immediately
-        preceding ``completed_partitions()`` call on the same checkpoint —
-        skips re-running that discovery job; None (the default, the
-        production path) discovers it here."""
-        from .operators.sketch_agg import merge_partials
+        partitions' partials are withheld from the checkpoint write."""
+        from .operators import sketch_agg
 
-        done = (completed if completed is not None
-                else self.completed_partitions())
-        partials = build_partials_with_lineage(
-            df, keys, factory, update, self.query_id, skip_partitions=done
-        )
+        done = self.completed_partitions()
+        if done:
+            df = df.filter(
+                ~F.spark_partition_id().isin([int(p) for p in sorted(done)]))
+        partials = sketch_agg.build_partials(df, keys, factory, update)
         if fail_partitions:
             partials = partials.filter(
                 ~F.col("partition_id").isin(list(fail_partitions))
             )
-        partials.write.mode("append").parquet(self._ckpt_path())
-        all_partials = (
-            self._read_ckpt()
-            .filter((F.col("query_id") == self.query_id)
-                    & (F.col("algo_version") == ALGO_VERSION))
-            .drop("partition_id", "wall_ms", "query_id", "algo_version")
-        )
-        return merge_partials(all_partials, keys, from_bytes, finalize, out_value_schema)
+        partials.withColumns({
+            "query_id": F.lit(self.query_id),
+            "algo_version": F.lit(ALGO_VERSION),
+        }).write.mode("append").parquet(self._ckpt_path())
+        all_partials = self._read_ckpt().filter(
+            (F.col("query_id") == self.query_id)
+            & (F.col("algo_version") == ALGO_VERSION))
+        return sketch_agg.merge_partials(all_partials, keys, from_bytes,
+                                         finalize, out_value_schema)
 
     def lineage_metrics(self) -> DataFrame:
         return (

@@ -66,25 +66,10 @@ from pyspark.sql import functions as F
 
 from . import commit as _commit
 from .checkpoint import ALGO_VERSION
+from .sources.tables import parquet_footer_rows
 
 _BATCH_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
 
-
-def _parquet_num_rows(path: str) -> int | None:
-    """Row count of a just-written LOCAL parquet dir from the file footers
-    (driver-side metadata read, no Spark job — guide §1: don't pay a scan
-    for a number the format already stores).  Returns None when the dir is
-    not a local readable parquet layout (caller falls back to a count)."""
-    try:
-        import pyarrow.parquet as pq
-
-        total = 0
-        for name in os.listdir(path):
-            if name.endswith(".parquet") and not name.startswith("."):
-                total += pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
-        return total
-    except Exception:
-        return None
 
 _INTEGRAL = ("bigint", "int", "smallint", "tinyint")
 
@@ -357,7 +342,7 @@ class IvfIndex:
                 "tombstone ids are the exactly-once ledger")
         (ids.select(_integral_id_expr(ids, self.id_col, "IvfIndex.delete"))
             .distinct().write.parquet(target))  # errorifexists
-        n_rows = _parquet_num_rows(target)
+        n_rows = parquet_footer_rows([target])
         if n_rows is None:  # non-local FS / unreadable footer: one tiny job
             n_rows = self.spark.read.parquet(target).count()
         meta = {"tomb_id": tomb_id, "rows": n_rows,

@@ -7,11 +7,15 @@ The reference library is a set of single-threaded accumulators
     stage 1 (map side, no shuffle):
         df.mapInPandas(build_partials)  — one sketch per (partition, key),
         updated with vectorized numpy over each Arrow batch; emits rows
-        (key..., sketch BINARY, rows BIGINT).
+        (key..., sketch BINARY, rows BIGINT, partition_id INT,
+        wall_ms DOUBLE).  The lineage columns are what checkpoint.py and
+        sketch_table.py persist; every partial build goes through here.
     stage 2 (reduce side):
-        partials.groupBy(keys).applyInPandas(merge)  — shuffles ONLY the
-        tiny binary partials, merges per key (associative monoid), emits the
-        finalized answer columns.
+        partials.repartition(n, *keys).groupBy(keys).applyInPandas(merge)
+        (merge_partials) — shuffles ONLY the tiny binary partials, merges
+        per key (associative monoid), and emits either the finalized
+        answer columns or, without a finalizer, re-serialized
+        (key..., sketch, rows) rows.  Every merge goes through here.
 
 Shuffle volume is O(input_partitions x distinct_keys x sketch_bytes),
 independent of row count — at 10^12 rows the shuffle is still megabytes.
@@ -25,9 +29,9 @@ because every sketch is a commutative monoid (SURVEY §4).
 
 from __future__ import annotations
 
-from typing import Callable, Sequence
-
 import re
+import time
+from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -152,43 +156,56 @@ def ensure_parallelism(df: DataFrame, min_partitions: int = None) -> DataFrame:
 
 def build_partials(df: DataFrame, keys: Sequence[str], factory: Callable[[], object],
                    update: Callable[[object, pd.DataFrame], None]) -> DataFrame:
-    """Stage 1: one serialized sketch per (input partition, key).  (The
-    lineage-tracking variant lives in checkpoint.build_partials_with_lineage.)"""
+    """Stage 1: one serialized sketch per (input partition, key), with its
+    lineage: (key..., sketch, rows, partition_id, wall_ms).  partition_id
+    is the task's partition (= ``spark_partition_id()`` of the rows it
+    read), so callers that skip partitions filter JVM-side before this
+    stage and no id column crosses Arrow; wall_ms is the task's build
+    time."""
     keys = list(keys)
     key_schema = _key_schema(df, keys)
-    out_schema = (key_schema + ", " if keys else "") + "sketch binary, rows bigint"
+    out_schema = (key_schema + ", " if keys else "") + (
+        "sketch binary, rows bigint, partition_id int, wall_ms double")
 
     def gen(batches):
+        from pyspark import TaskContext
+
+        t0 = time.perf_counter()
         acc: dict[tuple, object] = {}
         rows: dict[tuple, int] = {}
         for pdf in batches:
-            if keys:
-                for kv, sub in pdf.groupby(keys, sort=False, dropna=False):
-                    k = kv if isinstance(kv, tuple) else (kv,)
-                    sk = acc.get(k)
-                    if sk is None:
-                        sk = acc[k] = factory()
-                        rows[k] = 0
-                    update(sk, sub)
-                    rows[k] += len(sub)
-            else:
-                sk = acc.get(())
+            if len(pdf) == 0:
+                continue
+            groups = (pdf.groupby(keys, sort=False, dropna=False) if keys
+                      else [((), pdf)])
+            for kv, sub in groups:
+                k = kv if isinstance(kv, tuple) else (kv,)
+                sk = acc.get(k)
                 if sk is None:
-                    sk = acc[()] = factory()
-                    rows[()] = 0
-                update(sk, pdf)
-                rows[()] += len(pdf)
-        recs = [(*k, sk.to_bytes(), rows[k]) for k, sk in acc.items()]
-        yield pd.DataFrame(recs, columns=[*keys, "sketch", "rows"])
+                    sk = acc[k] = factory()
+                    rows[k] = 0
+                update(sk, sub)
+                rows[k] += len(sub)
+        pid = TaskContext.get().partitionId()
+        wall_ms = (time.perf_counter() - t0) * 1000
+        recs = [(*k, sk.to_bytes(), rows[k], pid, wall_ms)
+                for k, sk in acc.items()]
+        yield pd.DataFrame(recs, columns=[*keys, "sketch", "rows",
+                                          "partition_id", "wall_ms"])
 
     return df.mapInPandas(gen, out_schema)
 
 
 def merge_partials(partials: DataFrame, keys: Sequence[str],
                    from_bytes: Callable[[bytes], object],
-                   finalize: Callable[[object, int], dict],
-                   out_value_schema: str) -> DataFrame:
-    """Stage 2: shuffle binary partials by key, merge, finalize."""
+                   finalize: Callable[[object, int], dict] | None = None,
+                   out_value_schema: str = "sketch binary, rows bigint") -> DataFrame:
+    """Stage 2: shuffle the (key..., sketch, rows) partials by key and merge
+    each key's sketches.  With ``finalize`` it emits (key...,
+    out_value_schema); without, the merged rows stay serialized as
+    (key..., sketch, rows) — what the salted mid-stage, the rollup's finest
+    level and sketch-table compaction keep.  Other partial columns
+    (lineage) are dropped before the shuffle."""
     keys = list(keys)
     key_schema = _key_schema(partials, keys)
     out_schema = (key_schema + ", " if keys else "") + out_value_schema
@@ -198,28 +215,23 @@ def merge_partials(partials: DataFrame, keys: Sequence[str],
         for buf in pdf["sketch"].iloc[1:]:
             sk.merge(from_bytes(buf))
         total_rows = int(pdf["rows"].sum())
-        out = finalize(sk, total_rows)
         rec = {k: pdf[k].iloc[0] for k in keys}
-        rec.update(out)
+        rec.update(finalize(sk, total_rows) if finalize is not None
+                   else {"sketch": sk.to_bytes(), "rows": total_rows})
         return pd.DataFrame([rec])
 
-    if keys:
-        # user-specified repartition: exempt from AQE coalescing so the merge
-        # parallelism tracks the key count even though partial rows are tiny
-        n_parts = int(partials.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        return (
-            partials.repartition(n_parts, *keys)
-            .groupBy(keys)
-            .applyInPandas(lambda pdf: merge(pdf), out_schema)
-        )
-
-    def merge_global(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = merge(pdf.drop(columns=["_g"]))
-        return out.assign(_g=1)
-
-    return partials.withColumn("_g", F.lit(1)).groupBy("_g").applyInPandas(
-        merge_global, "_g int, " + out_value_schema
-    ).drop("_g")
+    partials = partials.select(*keys, "sketch", "rows")
+    if not keys:
+        # one group: plans as Exchange SinglePartition
+        return partials.groupBy().applyInPandas(merge, out_schema)
+    # user-specified repartition: exempt from AQE coalescing so the merge
+    # parallelism tracks the key count even though partial rows are tiny
+    n_parts = int(partials.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        partials.repartition(n_parts, *keys)
+        .groupBy(keys)
+        .applyInPandas(merge, out_schema)
+    )
 
 
 def sketch_aggregate(df: DataFrame, keys: Sequence[str],
@@ -237,37 +249,8 @@ def sketch_aggregate(df: DataFrame, keys: Sequence[str],
         salted = partials.withColumn(
             "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_partitions))
         )
-        mid = merge_sketch_rows(salted, [*keys, "_salt"], from_bytes)
-        partials = mid.drop("_salt")
+        partials = merge_partials(salted, [*keys, "_salt"], from_bytes).drop("_salt")
     return merge_partials(partials, keys, from_bytes, finalize, out_value_schema)
-
-
-def merge_sketch_rows(partials: DataFrame, keys: Sequence[str],
-                      from_bytes: Callable[[bytes], object]) -> DataFrame:
-    """Merge (key..., sketch, rows) rows down to one row per key, keeping the
-    serialized form (used by the salted mid-stage and checkpoint resume)."""
-    keys = list(keys)
-    key_schema = _key_schema(partials, keys)
-    out_schema = key_schema + ", sketch binary, rows bigint"
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = from_bytes(pdf["sketch"].iloc[0])
-        for buf in pdf["sketch"].iloc[1:]:
-            sk.merge(from_bytes(buf))
-        rec = {k: pdf[k].iloc[0] for k in keys}
-        rec["sketch"] = sk.to_bytes()
-        rec["rows"] = int(pdf["rows"].sum())
-        return pd.DataFrame([rec])
-
-    # user-specified repartition: exempt from AQE coalescing, which would
-    # collapse this byte-tiny but Python-heavy merge stage to 1-2 tasks
-    # (same rationale as merge_partials)
-    n_parts = int(partials.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return (
-        partials.repartition(n_parts, *keys)
-        .groupBy(keys)
-        .applyInPandas(lambda pdf: merge(pdf), out_schema)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -339,7 +322,7 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], factory,
                 f"{df.schema[k].dataType.simpleString()}"
             )
     partials = build_partials(df, keys, factory, update)
-    finest = merge_sketch_rows(partials, keys, from_bytes).cache()
+    finest = merge_partials(partials, keys, from_bytes).cache()
 
     def finalize_level(sk_rows: DataFrame, level: int) -> DataFrame:
         kept = keys[:level]
@@ -404,7 +387,7 @@ def _pairwise_sketch_estimates(df: DataFrame, key_col: str, col: str,
     hcol = F.col(col) if col_is_hash else F.xxhash64(col)
     hashed = ensure_parallelism(df.select(F.col(key_col), hcol.alias("_h")))
     partials = build_partials(hashed, [key_col], factory, update)
-    merged = merge_sketch_rows(partials, [key_col], from_bytes).cache()
+    merged = merge_partials(partials, [key_col], from_bytes).cache()
     spark = df.sparkSession
     kt = df.schema[key_col].dataType.simpleString()
     if pairs is None:
@@ -1098,7 +1081,7 @@ def count_sketch_build(df: DataFrame, keys: Sequence[str], col: str,
 
     partials = build_partials(ensure_parallelism(hashed), keys,
                               lambda: CountSketch(width, depth), update)
-    return merge_sketch_rows(partials, list(keys), CountSketch.from_bytes)
+    return merge_partials(partials, keys, CountSketch.from_bytes)
 
 
 def count_sketch_probe(df: DataFrame, key_cols: Sequence[str], col: str,

@@ -14,6 +14,8 @@ Conventions (driver contract):
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -41,92 +43,20 @@ from ..operators.sketch_agg import (
     welford_stats,
 )
 from ..operators.text import rolling_fingerprints, text_profile
-from ..sources.tables import load_table
-
-
-def _row_upper_bound(df: DataFrame) -> int | None:
-    """Total row count of a file-backed frame from its parquet footers —
-    a driver-side metadata read, no Spark job.  Only valid as an UPPER
-    bound for a filtered view of the same files.  None when the input is
-    not a locally stat-able parquet set."""
-    try:
-        import os
-        from urllib.parse import urlparse
-
-        import pyarrow.parquet as pq
-
-        files = df.inputFiles()
-        if not files:
-            return None
-        total = 0
-        for f in files:
-            u = urlparse(f)
-            if u.scheme not in ("", "file"):
-                return None
-            total += pq.ParquetFile(u.path).metadata.num_rows
-        return total or None
-    except Exception:
-        return None
-
-
-class _Bg:
-    """Run one callable on a background thread, capturing its result or
-    exception.  ``join()`` re-raises the worker's error (the gate fails
-    loud with the real exception, never a downstream KeyError);
-    ``wait()`` only waits — safe from a ``finally`` so a failing main
-    path never leaks a still-running thread into the next timed query."""
-
-    def __init__(self, fn):
-        import threading
-
-        self._fn = fn
-        self.value = None
-        self.exc: BaseException | None = None
-        self._t = threading.Thread(target=self._run)
-        self._t.start()
-
-    def _run(self):
-        try:
-            self.value = self._fn()
-        except BaseException as e:
-            self.exc = e
-
-    def wait(self) -> None:
-        self._t.join()
-
-    def join(self):
-        self._t.join()
-        if self.exc is not None:
-            raise self.exc
-        return self.value
+from ..sources.tables import load_table, parquet_footer_rows
 
 
 def _concurrent_lits(spark: SparkSession, **plans: DataFrame) -> dict:
     """Collect several INDEPENDENT subplans CONCURRENTLY (guide §2.6
-    overlap-independent-jobs; the CLAUDE.md streaming-gate exception —
-    each side is a string of fixed-overhead scheduler-latency-bound jobs
-    over tiny gate inputs, so overlap saves their serial fixed cost) and
-    rebuild each result as a literal frame with its original schema:
-    values bit-identical, downstream joins plan against flat leaves."""
-    import threading
-
-    rows: dict = {}
-    errs: dict = {}
-
-    def go(key, plan):
-        try:
-            rows[key] = plan.collect()
-        except BaseException as e:  # re-raised below — fail loud, not KeyError
-            errs[key] = e
-
-    ts = [threading.Thread(target=go, args=(k, p)) for k, p in plans.items()]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    if errs:
-        raise next(iter(errs.values()))
-    return {k: spark.createDataFrame(rows[k], plans[k].schema) for k in plans}
+    overlap-independent-jobs; the CLAUDE.md overlap exception — each side
+    is a string of fixed-overhead scheduler-latency-bound jobs over tiny
+    gate inputs, so overlap saves their serial fixed cost) and rebuild
+    each result as a literal frame with its original schema: values
+    bit-identical, downstream joins plan against flat leaves."""
+    with ThreadPoolExecutor(len(plans)) as ex:
+        futs = {k: ex.submit(p.collect) for k, p in plans.items()}
+    return {k: spark.createDataFrame(f.result(), plans[k].schema)
+            for k, f in futs.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -186,37 +116,39 @@ def q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the one-shot merge tree + exact side are independent of the table
     # lifecycle below (same cached hashes, no table in either path) —
-    # collect them CONCURRENTLY with it (the CLAUDE.md streaming-gate
+    # collect them CONCURRENTLY with it (the CLAUDE.md overlap
     # exception: both sides are fixed-overhead-bound jobs over the tiny
     # cached frame; guide §2.6).  The collected key-cardinality rows
     # re-enter the final plan via createDataFrame, values unchanged.
     stats_plan = exact.join(est, "event_type")
-    stats_t = _Bg(stats_plan.collect)
     scratch = tempfile.mkdtemp(prefix="sketch_tbl_gate_")
     try:
-        t = SketchTable(spark, f"{scratch}/tbl", ["event_type"])
-        # day-0 + day-1 land from ONE partial-build pass (append_many);
-        # day-2 exercises the single-append residual path after compaction
-        t.append_many(src.filter(F.col("_day") != "day-2"), "_day",
-                      ["day-0", "day-1"], factory, update)
-        t.compact(HyperLogLog.from_bytes)  # generation + residual batch path
-        t.append(src.filter(F.col("_day") == "day-2").drop("_day"),
-                 "day-2", factory, update)
-        inc = t.estimates(
-            HyperLogLog.from_bytes,
-            lambda sk, rows: {"incremental_distinct": int(round(sk.estimate()))},
-            "incremental_distinct bigint",
-        )
-        # key-cardinality-sized collect (a handful of event types) so the
-        # returned plan doesn't reference the scratch parquet after cleanup
-        inc = spark.createDataFrame(
-            inc.collect(), "event_type string, incremental_distinct bigint")
+        # leaving the with waits for the collect: it never leaks past a
+        # failing lifecycle, and src stays cached until it is done
+        with ThreadPoolExecutor(1) as ex:
+            stats_t = ex.submit(stats_plan.collect)
+            t = SketchTable(spark, f"{scratch}/tbl", ["event_type"])
+            # day-0 + day-1 land from ONE partial-build pass (append_many);
+            # day-2 exercises the single-append residual path after compaction
+            t.append_many(src.filter(F.col("_day") != "day-2"), "_day",
+                          ["day-0", "day-1"], factory, update)
+            t.compact(HyperLogLog.from_bytes)  # generation + residual batch path
+            t.append(src.filter(F.col("_day") == "day-2").drop("_day"),
+                     "day-2", factory, update)
+            inc = t.estimates(
+                HyperLogLog.from_bytes,
+                lambda sk, rows: {"incremental_distinct": int(round(sk.estimate()))},
+                "incremental_distinct bigint",
+            )
+            # key-cardinality-sized collect (a handful of event types) so the
+            # returned plan doesn't reference the scratch parquet after cleanup
+            inc = spark.createDataFrame(
+                inc.collect(), "event_type string, incremental_distinct bigint")
     finally:
-        stats_t.wait()  # never leak the collect past a failing lifecycle
         src.unpersist()
         shutil.rmtree(scratch, ignore_errors=True)
 
-    stats = spark.createDataFrame(stats_t.join(), stats_plan.schema)
+    stats = spark.createDataFrame(stats_t.result(), stats_plan.schema)
     rse = 1.04 / np.sqrt(2 ** 14)
     return (
         stats
@@ -343,7 +275,8 @@ def q_bloom_semijoin_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dim.count() job (guide §1 — don't scan for a number the format
     # already stores); falls back to the count for non-local inputs
     bloom = bloom_build(dim, "key",
-                        capacity=_row_upper_bound(cust) or max(dim.count(), 16),
+                        capacity=(parquet_footer_rows(cust.inputFiles())
+                                  or max(dim.count(), 16)),
                         fpr=1e-9)
     probed = bloom_might_contain(
         orders.select("o_orderpriority", F.col("o_custkey").cast("string").alias("key")),
@@ -1138,76 +1071,74 @@ def q_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lifecycle below; its construction runs a quantizer sample collect +
     # driver k-means — start it on a thread now so that fixed cost hides
     # under the lifecycle's jobs (guide §2.6; CLAUDE.md overlap exception)
-    final_t = _Bg(lambda: ivf_topk(emb, "vec_id", "embedding",
-                                   k=1, n_lists=8, n_probe=8))
     scratch = tempfile.mkdtemp(prefix="ivf_idx_gate_")
     try:
-        idx = IvfIndex(spark, f"{scratch}/ivf", "vec_id", "embedding")
-        idx.append(sub.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0),
-                   "day-0", n_lists=4)
-        idx.append(sub.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 1),
-                   "day-1", stats=False)  # gate manages no refresh
-        # one scalar per gate crosses the driver: (rows, mismatches) —
-        # never the per-row result set (the scratch index is deleted below)
-        def _equality_ok(ref_df, got_df, ref_col, got_col) -> bool:
-            row = (ref_df.join(got_df, "vec_id", "full").agg(
-                F.count("*").alias("n"),
-                F.sum((~F.col(ref_col).eqNullSafe(F.col(got_col)))
-                      .cast("int")).alias("bad")).collect()[0])
-            return int(row["n"]) > 0 and int(row["bad"] or 0) == 0
+        with ThreadPoolExecutor(3) as ex:
+            final_t = ex.submit(ivf_topk, emb, "vec_id", "embedding",
+                                k=1, n_lists=8, n_probe=8)
+            idx = IvfIndex(spark, f"{scratch}/ivf", "vec_id", "embedding")
+            idx.append(sub.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0),
+                       "day-0", n_lists=4)
+            idx.append(sub.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 1),
+                       "day-1", stats=False)  # gate manages no refresh
+            # one scalar per gate crosses the driver: (rows, mismatches) —
+            # never the per-row result set (the scratch index is deleted below)
+            def _equality_ok(ref_df, got_df, ref_col, got_col) -> bool:
+                row = (ref_df.join(got_df, "vec_id", "full").agg(
+                    F.count("*").alias("n"),
+                    F.sum((~F.col(ref_col).eqNullSafe(F.col(got_col)))
+                          .cast("int")).alias("bad")).collect()[0])
+                return int(row["n"]) > 0 and int(row["bad"] or 0) == 0
 
-        # the incremental gate and the external-search gate both read the
-        # SAME persisted index state (pre-delete) and are independent —
-        # run their compare jobs CONCURRENTLY (the CLAUDE.md streaming-
-        # gate exception: both sides are strings of scheduler-latency-
-        # bound jobs over a slice-sized index, so overlap saves their
-        # fixed per-job overhead; guide §2.6 overlap-independent-jobs).
-        def _run_incremental() -> bool:
-            inc = idx.topk(k=1, n_probe=None).select(
-                "vec_id", F.col("neighbor_id").alias("inc_n"))
-            # exactness reference in ONE job: driver-broadcast brute
-            # force over the slice (slice-sized collect, bounded)
-            ref = brute_force_topk(sub, sub, "vec_id", "embedding",
-                                   k=1).select(
-                "vec_id", F.col("neighbor_id").alias("ref_n"))
-            return _equality_ok(ref, inc, "ref_n", "inc_n")
+            # the incremental gate and the external-search gate both read the
+            # SAME persisted index state (pre-delete) and are independent —
+            # run their compare jobs CONCURRENTLY (the CLAUDE.md overlap
+            # exception: both sides are strings of scheduler-latency-
+            # bound jobs over a slice-sized index, so overlap saves their
+            # fixed per-job overhead; guide §2.6 overlap-independent-jobs).
+            def _run_incremental() -> bool:
+                inc = idx.topk(k=1, n_probe=None).select(
+                    "vec_id", F.col("neighbor_id").alias("inc_n"))
+                # exactness reference in ONE job: driver-broadcast brute
+                # force over the slice (slice-sized collect, bounded)
+                ref = brute_force_topk(sub, sub, "vec_id", "embedding",
+                                       k=1).select(
+                    "vec_id", F.col("neighbor_id").alias("ref_n"))
+                return _equality_ok(ref, inc, "ref_n", "inc_n")
 
-        def _run_search() -> bool:
-            # external-query verb against the SAME persisted index: re-id
-            # a sub-slice (disjoint id namespace) and full-probe search it
-            # — exact, so equality vs brute force with exclude_self=False
-            qext = (sub.filter(F.pmod(F.col("vec_id"), F.lit(4)) == 0)
-                    .select((F.col("vec_id") + F.lit(10_000_000))
-                            .alias("vec_id"), "embedding"))
-            got_s = idx.search(qext, k=1, n_probe=None).select(
-                "vec_id", F.col("neighbor_id").alias("s_n"))
-            ref_s = brute_force_topk(qext, sub, "vec_id", "embedding", k=1,
-                                     exclude_self=False).select(
-                "vec_id", F.col("neighbor_id").alias("r_n"))
-            return _equality_ok(ref_s, got_s, "r_n", "s_n")
+            def _run_search() -> bool:
+                # external-query verb against the SAME persisted index: re-id
+                # a sub-slice (disjoint id namespace) and full-probe search it
+                # — exact, so equality vs brute force with exclude_self=False
+                qext = (sub.filter(F.pmod(F.col("vec_id"), F.lit(4)) == 0)
+                        .select((F.col("vec_id") + F.lit(10_000_000))
+                                .alias("vec_id"), "embedding"))
+                got_s = idx.search(qext, k=1, n_probe=None).select(
+                    "vec_id", F.col("neighbor_id").alias("s_n"))
+                ref_s = brute_force_topk(qext, sub, "vec_id", "embedding", k=1,
+                                         exclude_self=False).select(
+                    "vec_id", F.col("neighbor_id").alias("r_n"))
+                return _equality_ok(ref_s, got_s, "r_n", "s_n")
 
-        ts = [_Bg(_run_incremental), _Bg(_run_search)]
-        for t in ts:
-            t.wait()
-        incremental_ok, search_ok = ts[0].join(), ts[1].join()
-        # removal verb against the SAME persisted index (runs LAST — it
-        # changes the contents): tombstone a slice, then full-probe topk
-        # must equal brute force over the SURVIVORS — deleted ids gone
-        # as queries and as neighbors, straight off the read-time mask
-        idx.delete(sub.filter(F.pmod(F.col("vec_id"), F.lit(10)) == 0)
-                   .select("vec_id"), "purge-0")
-        surv = sub.filter(F.pmod(F.col("vec_id"), F.lit(10)) != 0)
-        got_d = idx.topk(k=1, n_probe=None).select(
-            "vec_id", F.col("neighbor_id").alias("d_n"))
-        ref_d = brute_force_topk(surv, surv, "vec_id", "embedding",
-                                 k=1).select(
-            "vec_id", F.col("neighbor_id").alias("rd_n"))
-        delete_ok = _equality_ok(ref_d, got_d, "rd_n", "d_n")
+            inc_t, srch_t = ex.submit(_run_incremental), ex.submit(_run_search)
+            incremental_ok, search_ok = inc_t.result(), srch_t.result()
+            # removal verb against the SAME persisted index (runs LAST — it
+            # changes the contents): tombstone a slice, then full-probe topk
+            # must equal brute force over the SURVIVORS — deleted ids gone
+            # as queries and as neighbors, straight off the read-time mask
+            idx.delete(sub.filter(F.pmod(F.col("vec_id"), F.lit(10)) == 0)
+                       .select("vec_id"), "purge-0")
+            surv = sub.filter(F.pmod(F.col("vec_id"), F.lit(10)) != 0)
+            got_d = idx.topk(k=1, n_probe=None).select(
+                "vec_id", F.col("neighbor_id").alias("d_n"))
+            ref_d = brute_force_topk(surv, surv, "vec_id", "embedding",
+                                     k=1).select(
+                "vec_id", F.col("neighbor_id").alias("rd_n"))
+            delete_ok = _equality_ok(ref_d, got_d, "rd_n", "d_n")
     finally:
-        final_t.wait()  # never leak the build past a failing lifecycle
         shutil.rmtree(scratch, ignore_errors=True)
     return (
-        final_t.join()
+        final_t.result()
         .select("vec_id", F.col("neighbor_id").alias("ivf_neighbor"),
                 F.lit(incremental_ok).alias("incremental_ok"),
                 F.lit(search_ok).alias("search_ok"),
@@ -1353,7 +1284,7 @@ def _write_events_stream_input(spark: SparkSession, sf_dir: str,
     event_type spreads across all files row-independently, so the per-key
     multi-batch state gates keep slack even for rare types (a 3-row type
     lands in one file with p=0.25 under hashing vs arbitrary placement
-    under round-robin).  ONE definition for all four streaming queries."""
+    under round-robin)."""
     (load_table(spark, "events", sf_dir)
      .repartition(n_files, "event_id")
      .write.mode("overwrite").parquet(path))
@@ -1375,211 +1306,6 @@ def _stream_file_spread(spark: SparkSession, stream_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.countDistinct("_f").alias("n_input_files"))
     )
-
-
-def q_streaming_hll_events(spark: SparkSession, sf_dir: str,
-                           prepared_stream_dir: str | None = None) -> DataFrame:
-    """Structured Streaming state, oracle-gated (the reference's EP3
-    preserved-sketch story, lua_binding/cm_sketch.c:167-202, previously only
-    pytest-covered): events replay as a multi-file FILE STREAM with
-    maxFilesPerTrigger=1, so the per-event-type HLL registers in
-    ``applyInPandasWithState`` must survive and merge across >= 2
-    micro-batches (multi_batch_ok) — checkpointed state, not a single-batch
-    degenerate run.  After the availableNow drain, the final state's
-    estimate must sit within the published 3σ bound of the exact distinct
-    (hll_ok), and the exact distinct itself is value-hash-gated against
-    DuckDB.  ``prepared_stream_dir``: a caller-owned events parquet dir to
-    stream from (the merged query writes ONE shared input for all three
-    pipelines); without it the function writes (and cleans up) its own."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window
-
-    from ..streaming.stateful import streaming_hll_distinct
-
-    ev = load_table(spark, "events", sf_dir)
-    own_stream = prepared_stream_dir is None
-    stream_dir = prepared_stream_dir or tempfile.mkdtemp(prefix="sas_stream_in_")
-    ckpt = tempfile.mkdtemp(prefix="sas_stream_ckpt_")
-    try:
-        if own_stream:
-            _write_events_stream_input(spark, sf_dir, stream_dir)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-        )
-        est = streaming_hll_distinct(stream, "event_type", "user_id", p=14)
-        qname = f"shll_{uuid.uuid4().hex[:8]}"
-        q = (
-            est.writeStream.format("memory").queryName(qname)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        updates = spark.table(qname)
-        # the memory sink holds one update row per (key, micro-batch); the
-        # final state is the row with the highest batches counter per key
-        w = Window.partitionBy("event_type").orderBy(F.desc("batches"))
-        final = (
-            updates.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("event_type", "approx_distinct", "batches")
-        )
-        exact = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_distinct")
-        )
-        rse = 1.04 / np.sqrt(2 ** 14)
-        # materialized eagerly (dimension-sized: one row per event type) —
-        # the stream scratch dir is deleted in the finally below, so the
-        # returned lazy plan must not reference it
-        spread = spark.createDataFrame(
-            _stream_file_spread(spark, stream_dir).collect(),
-            "event_type string, n_input_files bigint",
-        )
-        return (
-            exact.join(final, "event_type")
-            .join(F.broadcast(spread), "event_type")
-            .select(
-                "event_type",
-                "exact_distinct",
-                (
-                    F.abs(F.col("approx_distinct") - F.col("exact_distinct"))
-                    <= F.greatest(3 * rse * F.col("exact_distinct"), F.lit(3.0))
-                ).alias("hll_ok"),
-                (F.col("batches")
-                 >= F.least(F.lit(2), F.col("n_input_files"))
-                 ).alias("multi_batch_ok"),
-            )
-            .orderBy("event_type")
-        )
-    finally:
-        if own_stream:
-            shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def q_streaming_kll_events(spark: SparkSession, sf_dir: str,
-                           prepared_stream_dir: str | None = None) -> DataFrame:
-    """Streaming KLL quantiles, oracle-gated: events replay as a multi-file
-    stream (maxFilesPerTrigger=1) through ``streaming_kll_quantiles`` —
-    the KLL sketch is per-key binary state in ``applyInPandasWithState``
-    and must survive/merge across >= 2 micro-batches (multi_batch_ok).
-    After the drain, the exact per-type median (linear interpolation, SQL
-    quantile_cont parity) is value-hash-gated, and kll_ok asserts the
-    final state's estimate has exact rank within 3% of 0.5 (k=200's
-    empirical envelope, test-gated at 2%) — computed by ranking the
-    estimate against the REAL value distribution, so a broken state merge
-    fails the gate.  The NULL/NaN filter is applied to the STREAM (not the
-    written files), so a shared full-events ``prepared_stream_dir`` feeds
-    all three streaming pipelines."""
-    import shutil
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window
-
-    from ..streaming.stateful import streaming_kll_quantiles
-
-    value_ok = F.col("value").isNotNull() & ~F.isnan("value")
-    ev_all = load_table(spark, "events", sf_dir)
-    ev = ev_all.filter(value_ok)
-    own_stream = prepared_stream_dir is None
-    stream_dir = prepared_stream_dir or tempfile.mkdtemp(prefix="sas_skll_in_")
-    ckpt = tempfile.mkdtemp(prefix="sas_skll_ckpt_")
-    try:
-        if own_stream:
-            _write_events_stream_input(spark, sf_dir, stream_dir)
-        stream = (
-            spark.readStream.schema(ev_all.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stream_dir)
-            .filter(value_ok)
-        )
-        est = streaming_kll_quantiles(stream, "event_type", "value",
-                                      k=200, qs=(0.5,))
-        qname = f"skll_{uuid.uuid4().hex[:8]}"
-        q = (
-            est.writeStream.format("memory").queryName(qname)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        updates = spark.table(qname)
-        w = Window.partitionBy("event_type").orderBy(F.desc("batches"))
-        final = (
-            updates.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("event_type", "q50", "batches")
-        )
-        # exact rank of the streaming estimate within the true distribution
-        ranked = (
-            ev.join(final, "event_type")
-            .groupBy("event_type")
-            .agg(
-                F.avg((F.col("value") <= F.col("q50")).cast("double")).alias("_rank"),
-                F.first("batches").alias("batches"),
-            )
-        )
-        exact = _exact_quantiles(ev, "event_type", "value", {"exact_median": 0.5})
-        # eager for the same scratch-dir-lifetime reason as the HLL query
-        spread = spark.createDataFrame(
-            _stream_file_spread(spark, stream_dir).collect(),
-            "event_type string, n_input_files bigint",
-        )
-        return (
-            exact.join(ranked, "event_type")
-            .join(F.broadcast(spread), "event_type")
-            .select(
-                "event_type",
-                F.round("exact_median", 6).alias("exact_median"),
-                (F.abs(F.col("_rank") - 0.5) <= 0.03).alias("kll_ok"),
-                (F.col("batches")
-                 >= F.least(F.lit(2), F.col("n_input_files"))
-                 ).alias("multi_batch_ok"),
-            )
-            .orderBy("event_type")
-        )
-    finally:
-        if own_stream:
-            shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def q_streaming_dedup_events(spark: SparkSession, sf_dir: str,
-                             prepared_stream_dir: str | None = None) -> DataFrame:
-    """Streaming first-seen dedup with BOUNDED Bloom state, oracle-gated:
-    events replay as a multi-file stream (maxFilesPerTrigger=1) through
-    ``streaming_bloom_dedup`` (32 hash-routed Bloom states, fpr 1e-9) in
-    append mode — duplicates must be suppressed ACROSS micro-batches, which
-    only works if the Bloom state survives the batch boundary.  Gates:
-    exact distinct user count value-hash-gated vs DuckDB; no_dup_emits_ok
-    (emitted values are globally unique — state preserved), subset_ok
-    (every emitted value really occurs in events), complete_ok (first-seen
-    count within the 1e-9-FP envelope of the exact distinct count)."""
-    import shutil
-    import tempfile
-
-    ev = load_table(spark, "events", sf_dir)
-    own_stream = prepared_stream_dir is None
-    stream_dir = prepared_stream_dir or tempfile.mkdtemp(prefix="sas_dedup_in_")
-    ckpt = tempfile.mkdtemp(prefix="sas_dedup_ckpt_")
-    try:
-        if own_stream:
-            _write_events_stream_input(spark, sf_dir, stream_dir)
-        q, qname = _start_bloom_dedup_drain(spark, ev.schema, stream_dir, ckpt)
-        q.awaitTermination()
-        return _bloom_dedup_gate(spark, ev, qname)
-    finally:
-        if own_stream:
-            shutil.rmtree(stream_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _start_bloom_dedup_drain(spark: SparkSession, schema, stream_dir: str,
@@ -1618,8 +1344,13 @@ def _start_bloom_dedup_drain(spark: SparkSession, schema, stream_dir: str,
 
 def _bloom_dedup_gate(spark: SparkSession, ev: DataFrame,
                       qname: str) -> DataFrame:
-    """Gate rows for a drained Bloom-dedup memory sink (see
-    q_streaming_dedup_events for the boolean contracts)."""
+    """Gate rows for a drained Bloom-dedup memory sink: the exact distinct
+    user count (value-hash-gated vs DuckDB) plus three booleans —
+    no_dup_emits_ok (emitted values are globally unique: duplicates were
+    suppressed ACROSS micro-batches, so the Bloom state survived the batch
+    boundary), subset_ok (every emitted value really occurs in events) and
+    complete_ok (the first-seen count sits within the Bloom filter's FP
+    envelope of the exact distinct count)."""
     emitted = spark.table(qname)
     seen = ev.select(F.col("user_id").cast("string").alias("user_id")).distinct()
     stats = emitted.agg(
@@ -1705,12 +1436,11 @@ def q_media_features_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(recs, columns=["media_id", "bmp", "wav"])
 
     media_dir = tempfile.mkdtemp(prefix="sas_media_")
-    feats_t = None
     try:
         # the text-payload feature branch reads only the documents table —
         # independent of the synthetic media parquet — so its collect runs
         # CONCURRENTLY with the media generation/write (the CLAUDE.md
-        # streaming-gate exception: two small fixed-overhead Python-stage
+        # overlap exception: two small fixed-overhead Python-stage
         # jobs; guide §2.6); the rows re-enter the join as a literal frame
         feats_plan = media_features(
             docs.select(F.col("doc_id").alias("media_id"),
@@ -1718,12 +1448,13 @@ def q_media_features_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(16)
         ).select("media_id", "n_bytes", "sha256",
                  F.round("byte_entropy", 6).alias("byte_entropy"))
-        feats_t = _Bg(feats_plan.collect)
-        (docs.select("doc_id").repartition(16)
-         .mapInPandas(make_media, "media_id long, bmp binary, wav binary")
-         .write.mode("overwrite").parquet(media_dir))
+        with ThreadPoolExecutor(1) as ex:
+            feats_t = ex.submit(feats_plan.collect)
+            (docs.select("doc_id").repartition(16)
+             .mapInPandas(make_media, "media_id long, bmp binary, wav binary")
+             .write.mode("overwrite").parquet(media_dir))
+            feats = spark.createDataFrame(feats_t.result(), feats_plan.schema)
         media = spark.read.parquet(media_dir)
-        feats = spark.createDataFrame(feats_t.join(), feats_plan.schema)
 
         img16 = decode_and_resize(
             media.select("media_id", F.col("bmp").alias("payload")),
@@ -1787,8 +1518,6 @@ def q_media_features_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             "duration_ms double, bmp_ok boolean, wav_ok boolean",
         ).orderBy("doc_id")
     finally:
-        if feats_t is not None:
-            feats_t.wait()  # never leak the collect past a failure
         shutil.rmtree(media_dir, ignore_errors=True)
 
 
@@ -1931,13 +1660,12 @@ def q_corpus_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # funnel below are INDEPENDENT subtrees; curate()'s call-time
     # components loop serializes several scheduler-latency-bound jobs, so
     # the stats collect runs CONCURRENTLY with it (the CLAUDE.md
-    # streaming-gate exception: both sides are fixed-overhead-bound over
+    # overlap exception: both sides are fixed-overhead-bound over
     # tiny gate data, overlap saves their fixed cost instead of contending
     # for bandwidth; guide §2.6 overlap-independent-jobs).  The collected
     # one-row stats then re-enter the final plan via createDataFrame with
     # the SAME derivation expressions, so values stay bit-identical.
     stats_plan = base.crossJoin(exact_vocab).crossJoin(vocab).crossJoin(lang_ent)
-    stats_t = _Bg(stats_plan.collect)
     # ---- planted curation funnel through curate() (docstring) ----------
     # Texts are synthesized from doc_id with per-doc-unique vocab, so
     # cross-class similarity is zero by construction and every funnel
@@ -2025,42 +1753,42 @@ def q_corpus_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
         )
     )
-    try:
+    # leaving the with waits for the stats collect, so a failure anywhere
+    # in the funnel never leaks it into the next query
+    with ThreadPoolExecutor(1) as ex:
+        stats_t = ex.submit(stats_plan.collect)
         plan = curate(
             corpus, text_col="text", id_col="uid",
             lang_allow=["en"], min_quality=0.5, near_threshold=0.8,
             max_top_2gram_frac=0.9, max_dup_3gram_frac=0.6,
             splits={"train": 1.0}, seq_len=128)
-    except BaseException:
-        stats_t.wait()  # never leak the collect past a failing curate
-        raise
-    fun = plan.funnel()
+        fun = plan.funnel()
 
-    def stage_docs(s: str):
-        return F.coalesce(
-            F.sum(F.when(F.col("stage") == s, F.col("docs"))),
-            F.lit(0)).cast("long")
+        def stage_docs(s: str):
+            return F.coalesce(
+                F.sum(F.when(F.col("stage") == s, F.col("docs"))),
+                F.lit(0)).cast("long")
 
-    funnel_row = fun.agg(
-        stage_docs("exact_duplicate").alias("funnel_exact_dup"),
-        stage_docs("near_duplicate").alias("funnel_near_dup"),
-        stage_docs("lang").alias("funnel_lang"),
-        stage_docs("low_quality").alias("funnel_low_quality"),
-        stage_docs("repetitive").alias("funnel_repetitive"),
-        stage_docs("kept").alias("funnel_kept_docs"),
-        F.coalesce(F.sum(F.when(F.col("stage") == "kept",
-                                F.col("tokens"))), F.lit(0))
-        .cast("long").alias("funnel_kept_tokens"),
-    )
-    # last packed sequence index = (total kept tokens - 1) div seq_len —
-    # gates the packing cumsum through the composition too
-    pack_row = plan.train_packing.agg(
-        F.max("end_seq").cast("long").alias("funnel_train_last_seq"))
+        funnel_row = fun.agg(
+            stage_docs("exact_duplicate").alias("funnel_exact_dup"),
+            stage_docs("near_duplicate").alias("funnel_near_dup"),
+            stage_docs("lang").alias("funnel_lang"),
+            stage_docs("low_quality").alias("funnel_low_quality"),
+            stage_docs("repetitive").alias("funnel_repetitive"),
+            stage_docs("kept").alias("funnel_kept_docs"),
+            F.coalesce(F.sum(F.when(F.col("stage") == "kept",
+                                    F.col("tokens"))), F.lit(0))
+            .cast("long").alias("funnel_kept_tokens"),
+        )
+        # last packed sequence index = (total kept tokens - 1) div seq_len —
+        # gates the packing cumsum through the composition too
+        pack_row = plan.train_packing.agg(
+            F.max("end_seq").cast("long").alias("funnel_train_last_seq"))
 
-    rse = 1.04 / np.sqrt(2 ** 14)
-    # the stats side finished while curate() ran its call-time jobs;
-    # re-enter it as a one-row literal frame (same values, same schema)
-    stats = spark.createDataFrame(stats_t.join(), stats_plan.schema)
+        rse = 1.04 / np.sqrt(2 ** 14)
+        # the stats side finished while curate() ran its call-time jobs;
+        # re-enter it as a one-row literal frame (same values, same schema)
+        stats = spark.createDataFrame(stats_t.result(), stats_plan.schema)
     return (
         stats
         .crossJoin(funnel_row).crossJoin(pack_row)
@@ -2429,7 +2157,9 @@ def q_streaming_sketches_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         # exact rank of the streaming median estimate in the true
-        # distribution (same contract as q_streaming_kll_events)
+        # distribution: kll_ok holds when it is within 3% of 0.5 (k=200's
+        # empirical envelope, test-gated at 2%) — ranked against the REAL
+        # values, so a broken state merge fails the gate
         ranked = (
             ev.join(final, "event_type")
             .groupBy("event_type")
@@ -2512,21 +2242,22 @@ def q_token_setops_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact side (sizes + pairwise intersections over the cached
     # distinct set) and the sketch build are independent consumers of the
     # same cached frame — collect the exact grid CONCURRENTLY with the
-    # build's driver-side pair enumeration (the CLAUDE.md streaming-gate
+    # build's driver-side pair enumeration (the CLAUDE.md overlap
     # exception: both are fixed-overhead job strings over the tiny cached
     # (lang, token) set; guide §2.6).  The pair-cardinality rows re-enter
     # the final join as a literal frame, values unchanged.
-    grid_t = _Bg(grid_plan.collect)
-    # ONE combined build (identical estimates to the separate ops — both
-    # families consume the same xxhash64 values): one scan + one Python
-    # build + one merge instead of two of each.
-    ests = hll_kmv_pairwise_set_ops(dt, "lang", "token", p=p, k=k).select(
-        F.col("key_a").alias("lang_a"), F.col("key_b").alias("lang_b"),
-        F.col("est_union").alias("_hll_union"), "est_intersection",
-        F.col("kmv_union").alias("_kmv_union"),
-        "est_a_minus_b", "est_b_minus_a",
-    )
-    grid = spark.createDataFrame(grid_t.join(), grid_plan.schema)
+    with ThreadPoolExecutor(1) as ex:
+        grid_t = ex.submit(grid_plan.collect)
+        # ONE combined build (identical estimates to the separate ops — both
+        # families consume the same xxhash64 values): one scan + one Python
+        # build + one merge instead of two of each.
+        ests = hll_kmv_pairwise_set_ops(dt, "lang", "token", p=p, k=k).select(
+            F.col("key_a").alias("lang_a"), F.col("key_b").alias("lang_b"),
+            F.col("est_union").alias("_hll_union"), "est_intersection",
+            F.col("kmv_union").alias("_kmv_union"),
+            "est_a_minus_b", "est_b_minus_a",
+        )
+        grid = spark.createDataFrame(grid_t.result(), grid_plan.schema)
     n_union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
     tbound = 4 * rel * n_union + 5
     return (
@@ -2578,25 +2309,26 @@ def q_countsketch_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact side (per-key count table -> F2 + top-10 window) and the
     # sketch build both scan lineitem once and are independent — collect
     # the exact side CONCURRENTLY with the build's collect (the CLAUDE.md
-    # streaming-gate exception: two small fixed-overhead job strings over
+    # overlap exception: two small fixed-overhead job strings over
     # the same cached/page-warm input; guide §2.6).  The key-cardinality
     # rows re-enter the plan as literal frames, values unchanged.
-    exact_t = _Bg(lambda: (f2.collect(), top_plan.collect()))
-    # ONE sketch build serves both capabilities: the same (5 x 2048)
-    # signed-counter table answers the AMS F2 estimate (median of row
-    # sum-of-squares, computed here from the collected bytes — 3 groups x
-    # 80 KB, driver-trivial) and the broadcast point probe.  The previous
-    # shape ran count_sketch_f2 as a SECOND full build over lineitem —
-    # an identical linear sketch, scanned and shuffled twice for no
-    # information gain.
-    built = count_sketch_build(li, ["l_returnflag"], "l_partkey").collect()
-    sketches = {(r["l_returnflag"],): r["sketch"] for r in built}
-    est = spark.createDataFrame(
-        [(k[0], float(CountSketch.from_bytes(v).f2_estimate()))
-         for k, v in sketches.items()],
-        "l_returnflag string, f2_estimate double",
-    )
-    f2_rows_c, top_rows_c = exact_t.join()
+    with ThreadPoolExecutor(1) as ex:
+        exact_t = ex.submit(lambda: (f2.collect(), top_plan.collect()))
+        # ONE sketch build serves both capabilities: the same (5 x 2048)
+        # signed-counter table answers the AMS F2 estimate (median of row
+        # sum-of-squares, computed here from the collected bytes — 3 groups x
+        # 80 KB, driver-trivial) and the broadcast point probe.  The previous
+        # shape ran count_sketch_f2 as a SECOND full build over lineitem —
+        # an identical linear sketch, scanned and shuffled twice for no
+        # information gain.
+        built = count_sketch_build(li, ["l_returnflag"], "l_partkey").collect()
+        sketches = {(r["l_returnflag"],): r["sketch"] for r in built}
+        est = spark.createDataFrame(
+            [(k[0], float(CountSketch.from_bytes(v).f2_estimate()))
+             for k, v in sketches.items()],
+            "l_returnflag string, f2_estimate double",
+        )
+        f2_rows_c, top_rows_c = exact_t.result()
     f2 = spark.createDataFrame(f2_rows_c, f2.schema)
     top = spark.createDataFrame(top_rows_c, top_plan.schema)
     rel = float(np.sqrt(8.0 / 2048))
@@ -2725,7 +2457,7 @@ def q_checkpoint_resume_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the BASE (uninterrupted) lifecycle and the BROKEN (withheld-
         # partitions) first run write to DIFFERENT checkpoint dirs and
         # share no state — run them CONCURRENTLY (the CLAUDE.md
-        # streaming-gate exception: both are strings of small fixed-
+        # overlap exception: both are strings of small fixed-
         # overhead jobs over the same tiny cached-scan input, so overlap
         # saves their serial fixed cost; guide §2.6).  The resumed run
         # stays strictly AFTER the broken run — that ordering IS the
@@ -2752,18 +2484,12 @@ def q_checkpoint_resume_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             broken.run(ev, ["event_type"], fail_partitions=fail, **kw)
             return broken.completed_partitions()
 
-        ts = [_Bg(_run_base), _Bg(_run_broken)]
-        for t in ts:
-            t.wait()
-        (base, nonempty), reused = ts[0].join(), ts[1].join()
+        with ThreadPoolExecutor(2) as ex:
+            base_t, broken_t = ex.submit(_run_base), ex.submit(_run_broken)
+            (base, nonempty), reused = base_t.result(), broken_t.result()
         resumed_ck = SketchCheckpoint(spark, broken_dir, "q")
-        # the resume's survivor set was JUST computed (broken.completed_
-        # partitions above) — hand it to run() so the gate doesn't pay the
-        # same discovery job twice back-to-back; run()'s own discovery
-        # path stays the default (and is what computed `reused`)
         resumed = {r["event_type"]: r["approx_distinct"] for r in
-                   resumed_ck.run(ev, ["event_type"], completed=reused,
-                                  **kw).collect()}
+                   resumed_ck.run(ev, ["event_type"], **kw).collect()}
         lineage = resumed_ck.lineage_metrics().collect()
         pids = sorted(r["partition_id"] for r in lineage)
         reused_ok = bool(

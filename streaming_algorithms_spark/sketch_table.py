@@ -9,8 +9,8 @@ mergeability contract (SURVEY §1.3: every sketch is a commutative
 monoid with an associative byte-stable ``merge``) makes exact:
 
     table.append(new_batch_df, batch_id="crawl-2026-08-17")
-        stage-1 partials over ONLY the new batch (the same
-        ``build_partials_with_lineage`` shape as checkpoint.py —
+        stage-1 partials over ONLY the new batch (``build_partials``,
+        the same builder and lineage columns as checkpoint.py —
         per-partition (key..., sketch, rows) rows with lineage),
         written to an append-only per-batch directory.
     table.estimates()
@@ -70,7 +70,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import commit as _commit
-from .checkpoint import ALGO_VERSION, build_partials_with_lineage
+from .checkpoint import ALGO_VERSION
+from .operators import sketch_agg
 
 _BATCH_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
 
@@ -202,9 +203,10 @@ class SketchTable:
                 "batch ids are the exactly-once ledger; pick a new id or "
                 "remove the old batch first"
             )
-        partials = build_partials_with_lineage(
-            df, self.keys, factory, update, query_id=batch_id
-        )
+        partials = sketch_agg.build_partials(
+            df, self.keys, factory, update
+        ).withColumns({"query_id": F.lit(batch_id),
+                       "algo_version": F.lit(ALGO_VERSION)})
         # errorifexists (default mode): two concurrent appends with the
         # same id race at the FS layer too, not just the check above.
         partials.write.parquet(target)
@@ -244,9 +246,10 @@ class SketchTable:
                     "batch ids are the exactly-once ledger; pick a new id "
                     "or remove the old batch first")
         self._check_meta(write_if_missing=True)
-        partials = build_partials_with_lineage(
-            df, [batch_col] + self.keys, factory, update, query_id=""
-        ).withColumn("query_id", F.col(batch_col).cast("string"))
+        partials = sketch_agg.build_partials(
+            df, [batch_col] + self.keys, factory, update
+        ).withColumns({"query_id": F.col(batch_col).cast("string"),
+                       "algo_version": F.lit(ALGO_VERSION)})
         # partials are serialized-sketch rows (kilobytes per batch): cache
         # them so the one corpus pass above feeds every per-batch write and
         # the ledger check below without re-scanning raw data
@@ -276,17 +279,14 @@ class SketchTable:
         byte-identical before and after (merge associativity); read
         amplification resets to one unit.  Refuses to span mixed
         ``algo_version`` rows (see module docstring)."""
-        from .operators.sketch_agg import merge_sketch_rows
-
         self._check_meta(write_if_missing=False)
         gens = self._generations()  # one snapshot for units, covers, and n
         units = self.live_units(gens)
         if not units:
             raise ValueError(f"nothing to compact in {self.path!r}")
         self._fence_versions(units)
-        rows = self._read_units(units)
-        merged = merge_sketch_rows(
-            rows.select(*self.keys, "sketch", "rows"), self.keys, from_bytes
+        merged = sketch_agg.merge_partials(
+            self._read_units(units), self.keys, from_bytes
         ).withColumns({
             "partition_id": F.lit(-1),
             "wall_ms": F.lit(0.0),
@@ -419,9 +419,7 @@ class SketchTable:
         """Finalized per-key estimates over the live units.  Exactly equal
         to a one-shot ``sketch_aggregate`` over the union of all appended
         batches' raw data — the merge tree differs, the monoid doesn't."""
-        from .operators.sketch_agg import merge_partials
-
-        return merge_partials(
+        return sketch_agg.merge_partials(
             self.sketch_rows(), self.keys, from_bytes, finalize,
             out_value_schema,
         )

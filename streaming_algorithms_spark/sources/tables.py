@@ -12,6 +12,10 @@ present -> correct table identifier requested) rather than a real read.
 
 from __future__ import annotations
 
+import os
+from typing import Sequence
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -45,3 +49,31 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names=TABL
                    format: str = "parquet") -> None:
     for n in names:
         load_table(spark, n, sf_dir, format).createOrReplaceTempView(n)
+
+
+def parquet_footer_rows(paths: Sequence[str]) -> int | None:
+    """Total row count of LOCAL parquet data from the file footers — a
+    driver-side metadata read, no Spark job (guide §1: don't pay a scan
+    for a number the format already stores).  Each path is a parquet file
+    or a directory of part files.  None when a path is not on a local
+    filesystem or no readable parquet footer exists; the caller then falls
+    back to a Spark count."""
+    import pyarrow.parquet as pq
+
+    files = []
+    try:
+        for p in paths:
+            u = urlparse(p)
+            if u.scheme not in ("", "file"):
+                return None
+            if os.path.isdir(u.path):
+                files += [os.path.join(u.path, n) for n in os.listdir(u.path)
+                          if n.endswith(".parquet")
+                          and not n.startswith((".", "_"))]
+            else:
+                files.append(u.path)
+        if not files:
+            return None
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    except Exception:
+        return None

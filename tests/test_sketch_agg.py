@@ -16,7 +16,7 @@ from streaming_algorithms_spark.operators import (
     cms_heavy_hitters,
     hll_distinct,
     kll_quantiles,
-    merge_sketch_rows,
+    merge_partials,
     welford_stats,
 )
 from streaming_algorithms_spark.sketches import HyperLogLog
@@ -152,7 +152,7 @@ def _merged_hll_bytes(df, n_parts):
     parts = build_partials(
         df.repartition(n_parts), ["lang"], lambda: HyperLogLog(10), update
     )
-    merged = merge_sketch_rows(parts, ["lang"], HyperLogLog.from_bytes)
+    merged = merge_partials(parts, ["lang"], HyperLogLog.from_bytes)
     return {r["lang"]: bytes(r["sketch"]) for r in merged.collect()}
 
 
