@@ -6,9 +6,12 @@ the log into (job, duration, description) rows plus the driver-side gaps
 between jobs — the measurement §1 step: where does each query's wall time
 actually go (jobs vs scheduler/driver overhead)?  Jobs of one query may
 overlap, so its critical path is the union of its job intervals, not their
-sum, and the driver gap (wall - critical path) is never negative.
+sum, and the driver gap (wall - critical path) is never negative.  First
+it prints one "python task fixed cost" line: what a 1-row Python task
+costs over a JVM-only one (ROADMAP aim 1's Arrow/Python layer).
 
-Usage: PYTHONPATH=/root/repo python scripts/profile_queries.py q1 q2 ...
+Usage (from the repo root, session at SPARK_GRAFT_CPUS, default all CPUs):
+    PYTHONPATH=. python scripts/profile_queries.py q1 q2 ...
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import time
 
@@ -28,44 +32,59 @@ EVLOG = "/tmp/spark_graft_evlog"
 SAMPLES = int(os.environ.get("PROFILE_SAMPLES", "2"))
 
 
+def python_task_cost(spark) -> None:
+    """Print the fixed cost of one Python task: the median 1-row
+    mapInPandas collect minus the median JVM-only collect of the same row
+    (the Arrow/Python layer with no data in it)."""
+    def ident(batches):
+        yield from batches
+
+    one = spark.range(1, numPartitions=1)
+    samples = 9
+
+    def median_s(run) -> float:
+        times = []
+        for _ in range(samples):
+            t0 = time.perf_counter()
+            run()
+            times.append(time.perf_counter() - t0)
+        return statistics.median(times)
+
+    py = median_s(lambda: one.mapInPandas(ident, "id long").collect())
+    jvm = median_s(one.collect)
+    print(f"python task fixed cost {py - jvm:.3f}s "
+          f"(1-row mapInPandas {py:.3f}s - JVM-only {jvm:.3f}s, "
+          f"median of {samples})")
+
+
 def main() -> None:
     names = sys.argv[1:]
     shutil.rmtree(EVLOG, ignore_errors=True)
     os.makedirs(EVLOG, exist_ok=True)
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(var, "1")
-    from pyspark.sql import SparkSession
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    # the event log rides spark-submit's own confs; the session is the
+    # library's (sources/session.get_spark)
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf spark.eventLog.enabled=true",
+        f"--conf spark.eventLog.dir={EVLOG}",
+        "--conf spark.eventLog.compress=false",
+        "--conf spark.eventLog.rolling.enabled=false",
+        "pyspark-shell",
+    ])
+    from streaming_algorithms_spark.sources.session import get_spark
 
-    # mirror sources/session.get_spark exactly, plus the event log
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVLOG)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("profile")
     sc = spark.sparkContext
 
-    # warm workers like bench.py does
-    import pandas as pd  # noqa: F401
+    # warm one Python worker per core, importing the library as every
+    # library UDF does
+    def warm(batches):
+        import streaming_algorithms_spark.sketches  # noqa: F401
+        yield from batches
 
-    def noop(batches):
-        import numpy  # noqa: F401
-        for pdf in batches:
-            yield pdf
-    spark.range(0, 128, numPartitions=128).mapInPandas(noop, "id long").count()
+    n = sc.defaultParallelism
+    spark.range(n, numPartitions=n).mapInPandas(warm, "id long").collect()
+    python_task_cost(spark)
 
     from streaming_algorithms_spark.plans.queries import QUERIES
 

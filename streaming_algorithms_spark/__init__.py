@@ -28,3 +28,9 @@ that makes the design hold at 10^12 rows.
 """
 
 __version__ = "0.1.0"
+
+# every library UDF imports this package in its Python worker: tidy the
+# worker's import caches there once per process (worker_imports.py)
+from .worker_imports import tidy_worker_imports as _tidy_worker_imports
+
+_tidy_worker_imports()

@@ -79,6 +79,11 @@ class SketchCheckpoint:
             )
         return df
 
+    def _current(self) -> DataFrame:
+        """Checkpoint rows written under this ALGO_VERSION — the only
+        partials resume merges and lineage reports."""
+        return self._read_ckpt().filter(F.col("algo_version") == ALGO_VERSION)
+
     def completed_partitions(self) -> frozenset:
         """Partitions with current-version partials.  Partials stamped by a
         different ALGO_VERSION (or none — pre-versioning checkpoints) are
@@ -93,13 +98,10 @@ class SketchCheckpoint:
         from pyspark.errors import AnalysisException
 
         try:
-            ckpt = self._read_ckpt()
+            ckpt = self._current()
         except AnalysisException:
             return frozenset()
-        rows = (
-            ckpt.filter(F.col("algo_version") == ALGO_VERSION)
-            .select("partition_id").distinct().collect()
-        )
+        rows = ckpt.select("partition_id").distinct().collect()
         return frozenset(r["partition_id"] for r in rows)
 
     def run(self, df: DataFrame, keys: Sequence[str], factory, update,
@@ -124,15 +126,17 @@ class SketchCheckpoint:
             "query_id": F.lit(self.query_id),
             "algo_version": F.lit(ALGO_VERSION),
         }).write.mode("append").parquet(self._ckpt_path())
-        all_partials = self._read_ckpt().filter(
-            (F.col("query_id") == self.query_id)
-            & (F.col("algo_version") == ALGO_VERSION))
+        all_partials = self._current().filter(
+            F.col("query_id") == self.query_id)
         return sketch_agg.merge_partials(all_partials, keys, from_bytes,
                                          finalize, out_value_schema)
 
     def lineage_metrics(self) -> DataFrame:
+        """Rows, wall_ms and partial count per partition over the
+        current-version partials: a stale version's partials are
+        recomputed, never counted."""
         return (
-            self.spark.read.parquet(self._ckpt_path())
+            self._current()
             .groupBy("partition_id")
             .agg(
                 F.sum("rows").alias("rows"),

@@ -131,3 +131,39 @@ def test_pre_versioning_checkpoint_resumes_cleanly(spark, webpages, tmp_path):
     result = {r["lang"]: (r["est"], r["rows_seen"])
               for r in old.run(df, ["lang"], **kw).collect()}
     assert result == baseline
+
+
+def test_lineage_metrics_skip_stale_version_partials(spark, tmp_path):
+    """After a version-mismatch recompute the checkpoint dir holds both the
+    stale and the current partials; lineage reports only the current ones
+    (1000 rows, 4 partitions x 3 keys), as the merge does."""
+    import streaming_algorithms_spark.checkpoint as cp
+
+    def _update(sk, pdf):
+        sk.update_batch(encode_utf8(pdf["v"]))
+
+    kw = dict(
+        factory=lambda: HyperLogLog(11),
+        update=_update,
+        from_bytes=HyperLogLog.from_bytes,
+        finalize=lambda sk, rows: {"rows_seen": rows},
+        out_value_schema="rows_seen bigint",
+    )
+    df = (spark.range(1000)
+          .select((F.col("id") % 3).alias("k"),
+                  F.col("id").cast("string").alias("v"))
+          .repartition(4))
+    ck = cp.SketchCheckpoint(spark, str(tmp_path / "ck_lin"), "q1")
+    old_version = cp.ALGO_VERSION
+    try:
+        cp.ALGO_VERSION = "0-stale"
+        ck.run(df, ["k"], **kw).collect()
+    finally:
+        cp.ALGO_VERSION = old_version
+    merged = ck.run(df, ["k"], **kw).collect()
+    assert sum(r["rows_seen"] for r in merged) == 1000
+
+    m = ck.lineage_metrics().collect()
+    assert {r["partition_id"] for r in m} == set(range(4))
+    assert sum(r["rows"] for r in m) == 1000
+    assert sum(r["n_partials"] for r in m) == 12

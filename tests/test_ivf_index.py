@@ -572,3 +572,47 @@ def test_undelete_unabsorbed_tombstone(spark, tmp_path):
         idx.undelete("oops")
     with pytest.raises(ValueError, match="no committed tombstone"):
         idx.undelete("never")
+
+
+def test_observed_drift_stats_equal_read_back(spark, tmp_path):
+    """append's and refresh's drift statistics ride the write as observed
+    metrics (pyspark Observation); they must equal a read-back of the rows
+    that write committed."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from streaming_algorithms_spark.ivf_index import IvfIndex
+
+    rng = np.random.default_rng(5)
+    dim = 8
+    centers = rng.normal(size=(3, dim))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    idx = IvfIndex(spark, str(tmp_path / "ivf"), "vec_id", "embedding")
+
+    def read_back(path):
+        r = spark.read.parquet(path).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.avg("assign_cos").alias("cos")).collect()[0]
+        return r["n"], r["cos"]
+
+    metas = [idx.append(_mk_df(spark, _clustered(rng, centers, 20, dim)),
+                        "day-0", n_lists=3),
+             idx.append(_mk_df(spark, _clustered(rng, centers, 7, dim,
+                                                 id_base=1000)), "day-1")]
+    for i, m in enumerate(metas):
+        n, cos = read_back(idx._batch_dir(f"day-{i}"))
+        assert m["rows"] == n and m["mean_cos"] == pytest.approx(cos, abs=1e-6)
+    with open(os.path.join(str(tmp_path / "ivf"), "quantizer-0",
+                           "QUANT.json")) as f:
+        baseline0 = json.load(f)["baseline_cos"]
+    assert baseline0 == pytest.approx(
+        read_back(idx._batch_dir("day-0"))[1], abs=1e-12)
+
+    gen = idx.refresh(bucket=False)
+    qgen, _, baseline1 = idx.latest_quantizer()
+    assert qgen == 1
+    n, cos = read_back(os.path.join(str(tmp_path / "ivf"), gen, "data"))
+    assert n == 20 * 3 + 7 * 3
+    assert baseline1 == pytest.approx(cos, abs=1e-12)
