@@ -6,7 +6,10 @@ the log into (job, duration, description) rows plus the driver-side gaps
 between jobs — the measurement §1 step: where does each query's wall time
 actually go (jobs vs scheduler/driver overhead)?  Jobs of one query may
 overlap, so its critical path is the union of its job intervals, not their
-sum, and the driver gap (wall - critical path) is never negative.  First
+sum, and the driver gap (wall - critical path) is never negative.  Jobs
+without the query's description that overlap its wall window (threads
+that do not inherit local properties, streaming micro-batches, which set
+their own) are printed as unattributed, not folded into the gap.  First
 it prints one "python task fixed cost" line: what a 1-row Python task
 costs over a JVM-only one (ROADMAP aim 1's Arrow/Python layer).
 
@@ -147,10 +150,16 @@ def main() -> None:
                      if j["desc"] == tag and "end" in j),
                     key=lambda j: j["start"])
         wall = t1 - t0
-        crit = union_ms([(j["start"], j["end"]) for j in js], t0, t1)
+        spans = [(j["start"], j["end"]) for j in js]
+        crit = union_ms(spans, t0, t1)
+        other = [(j["start"], j["end"]) for j in jobs.values()
+                 if "end" in j and not j["desc"].startswith("PROFILE::")
+                 and j["start"] < t1 and j["end"] > t0]
+        busy = union_ms(spans + other, t0, t1)
         print(f"\n=== {name} sample {s}: wall {wall:.3f}s, "
               f"{len(js)} jobs critical path {crit:.3f}s, "
-              f"driver-gap {wall - crit:.3f}s")
+              f"{len(other)} unattributed jobs {union_ms(other, t0, t1):.3f}s, "
+              f"driver-gap {wall - busy:.3f}s")
         prev_end = t0
         for i, j in enumerate(js):
             # a job starting before the previous ones ended overlaps: no gap

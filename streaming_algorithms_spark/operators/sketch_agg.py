@@ -136,21 +136,19 @@ def estimate_scan_partitions(df: DataFrame) -> int | None:
 _ASSUME_PARALLEL = 1 << 30
 
 
-def ensure_parallelism(df: DataFrame, min_partitions: int = None) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Small inputs (test-scale single parquet files) arrive as 1-2 input
     partitions, serializing the python stage.  Repartition ONLY when the
     input has fewer partitions than half the cluster — at production scale
     (partitions >> cores) this is a no-op, so no raw-row shuffle is added.
     Partition counts come from file-split math (estimate_scan_partitions),
     never ``df.rdd`` — no RDD conversion in the gated-query plans."""
-    sc = df.sparkSession.sparkContext
-    if min_partitions is None:
-        min_partitions = sc.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     est = estimate_scan_partitions(df)
     if est is None:
         est = df.rdd.getNumPartitions()  # in-memory frames (tests) only
-    if est < max(2, min_partitions // 2):
-        return df.repartition(min_partitions)
+    if est < max(2, par // 2):
+        return df.repartition(par)
     return df
 
 

@@ -20,6 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .. import functions as fn
 from ..operators import sampling as _sampling
@@ -44,19 +45,6 @@ from ..operators.sketch_agg import (
 )
 from ..operators.text import rolling_fingerprints, text_profile
 from ..sources.tables import load_table, parquet_footer_rows
-
-
-def _concurrent_lits(spark: SparkSession, **plans: DataFrame) -> dict:
-    """Collect several INDEPENDENT subplans CONCURRENTLY (guide §2.6
-    overlap-independent-jobs; the CLAUDE.md overlap exception — each side
-    is a string of fixed-overhead scheduler-latency-bound jobs over tiny
-    gate inputs, so overlap saves their serial fixed cost) and rebuild
-    each result as a literal frame with its original schema: values
-    bit-identical, downstream joins plan against flat leaves."""
-    with ThreadPoolExecutor(len(plans)) as ex:
-        futs = {k: ex.submit(p.collect) for k, p in plans.items()}
-    return {k: spark.createDataFrame(f.result(), plans[k].schema)
-            for k, f in futs.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -93,8 +81,9 @@ def q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         sk.add_hashes(pdf["_h"].to_numpy(np.int64).view(np.uint64))
 
     # same hash/NULL semantics as hll_distinct(jvm_hash=True): only the
-    # 8-byte xxhash64 crosses the Arrow boundary; ONE cached hashed frame
-    # feeds the one-shot build, the day split, and the appends
+    # 8-byte xxhash64 crosses the Arrow boundary; ONE hashed frame feeds
+    # the one-shot build, the day split, and the appends (cached for the
+    # table lifecycle)
     src = (
         ev.filter(F.col("user_id").isNotNull())
         .select("event_type", F.xxhash64("user_id").alias("_h"))
@@ -114,44 +103,32 @@ def q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "approx_distinct": int(round(sk.estimate()))},
         out_value_schema="approx_distinct bigint",
     )
-    # the one-shot merge tree + exact side are independent of the table
-    # lifecycle below (same cached hashes, no table in either path) —
-    # collect them CONCURRENTLY with it (the CLAUDE.md overlap
-    # exception: both sides are fixed-overhead-bound jobs over the tiny
-    # cached frame; guide §2.6).  The collected key-cardinality rows
-    # re-enter the final plan via createDataFrame, values unchanged.
-    stats_plan = exact.join(est, "event_type")
     scratch = tempfile.mkdtemp(prefix="sketch_tbl_gate_")
     try:
-        # leaving the with waits for the collect: it never leaks past a
-        # failing lifecycle, and src stays cached until it is done
-        with ThreadPoolExecutor(1) as ex:
-            stats_t = ex.submit(stats_plan.collect)
-            t = SketchTable(spark, f"{scratch}/tbl", ["event_type"])
-            # day-0 + day-1 land from ONE partial-build pass (append_many);
-            # day-2 exercises the single-append residual path after compaction
-            t.append_many(src.filter(F.col("_day") != "day-2"), "_day",
-                          ["day-0", "day-1"], factory, update)
-            t.compact(HyperLogLog.from_bytes)  # generation + residual batch path
-            t.append(src.filter(F.col("_day") == "day-2").drop("_day"),
-                     "day-2", factory, update)
-            inc = t.estimates(
-                HyperLogLog.from_bytes,
-                lambda sk, rows: {"incremental_distinct": int(round(sk.estimate()))},
-                "incremental_distinct bigint",
-            )
-            # key-cardinality-sized collect (a handful of event types) so the
-            # returned plan doesn't reference the scratch parquet after cleanup
-            inc = spark.createDataFrame(
-                inc.collect(), "event_type string, incremental_distinct bigint")
+        t = SketchTable(spark, f"{scratch}/tbl", ["event_type"])
+        # day-0 + day-1 land from ONE partial-build pass (append_many);
+        # day-2 exercises the single-append residual path after compaction
+        t.append_many(src.filter(F.col("_day") != "day-2"), "_day",
+                      ["day-0", "day-1"], factory, update)
+        t.compact(HyperLogLog.from_bytes)  # generation + residual batch path
+        t.append(src.filter(F.col("_day") == "day-2").drop("_day"),
+                 "day-2", factory, update)
+        inc = t.estimates(
+            HyperLogLog.from_bytes,
+            lambda sk, rows: {"incremental_distinct": int(round(sk.estimate()))},
+            "incremental_distinct bigint",
+        )
+        # key-cardinality-sized collect (a handful of event types) so the
+        # returned plan doesn't reference the scratch parquet after cleanup
+        inc = spark.createDataFrame(
+            inc.collect(), "event_type string, incremental_distinct bigint")
     finally:
         src.unpersist()
         shutil.rmtree(scratch, ignore_errors=True)
 
-    stats = spark.createDataFrame(stats_t.result(), stats_plan.schema)
     rse = 1.04 / np.sqrt(2 ** 14)
     return (
-        stats
+        exact.join(est, "event_type")
         .join(inc, "event_type")
         .select(
             "event_type",
@@ -210,10 +187,7 @@ def q_kll_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p50_exact": 0.5, "p95_exact": 0.95,
         "_p48": 0.48, "_p52": 0.52, "_p93": 0.93, "_p97": 0.97,
     })
-    # independent exact/sketch sides: concurrent collect, literal join
-    lits = _concurrent_lits(spark, exact=exact, kll=kll)
-    joined = lits["exact"].join(lits["kll"], "l_returnflag")
-    return joined.select(
+    return exact.join(kll, "l_returnflag").select(
         "l_returnflag",
         "n_rows",
         F.round("p50_exact", 4).alias("p50_exact"),
@@ -629,9 +603,6 @@ def q_tdigest_quantiles_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p50_exact": 0.5, "p99_exact": 0.99,
         "_p48": 0.48, "_p52": 0.52, "_p985": 0.985, "_p995": 0.995,
     })
-    # independent exact/sketch sides: concurrent collect, literal join
-    lits = _concurrent_lits(spark, exact=exact, td=td)
-    exact, td = lits["exact"], lits["td"]
     return (
         exact.join(td, "o_orderpriority")
         .select(
@@ -1067,78 +1038,59 @@ def q_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, "embeddings", sf_dir)
     sub = emb.filter(F.pmod(F.col("vec_id"), F.lit(5)) == 0)
-    # the returned full-corpus query is INDEPENDENT of the scratch-index
-    # lifecycle below; its construction runs a quantizer sample collect +
-    # driver k-means — start it on a thread now so that fixed cost hides
-    # under the lifecycle's jobs (guide §2.6; CLAUDE.md overlap exception)
+
+    # one scalar per gate crosses the driver: (rows, mismatches) — never
+    # the per-row result set (the scratch index is deleted below)
+    def _equality_ok(ref_df, got_df, ref_col, got_col) -> bool:
+        row = (ref_df.join(got_df, "vec_id", "full").agg(
+            F.count("*").alias("n"),
+            F.sum((~F.col(ref_col).eqNullSafe(F.col(got_col)))
+                  .cast("int")).alias("bad")).collect()[0])
+        return int(row["n"]) > 0 and int(row["bad"] or 0) == 0
+
     scratch = tempfile.mkdtemp(prefix="ivf_idx_gate_")
     try:
-        with ThreadPoolExecutor(3) as ex:
-            final_t = ex.submit(ivf_topk, emb, "vec_id", "embedding",
-                                k=1, n_lists=8, n_probe=8)
-            idx = IvfIndex(spark, f"{scratch}/ivf", "vec_id", "embedding")
-            idx.append(sub.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0),
-                       "day-0", n_lists=4)
-            idx.append(sub.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 1),
-                       "day-1", stats=False)  # gate manages no refresh
-            # one scalar per gate crosses the driver: (rows, mismatches) —
-            # never the per-row result set (the scratch index is deleted below)
-            def _equality_ok(ref_df, got_df, ref_col, got_col) -> bool:
-                row = (ref_df.join(got_df, "vec_id", "full").agg(
-                    F.count("*").alias("n"),
-                    F.sum((~F.col(ref_col).eqNullSafe(F.col(got_col)))
-                          .cast("int")).alias("bad")).collect()[0])
-                return int(row["n"]) > 0 and int(row["bad"] or 0) == 0
-
-            # the incremental gate and the external-search gate both read the
-            # SAME persisted index state (pre-delete) and are independent —
-            # run their compare jobs CONCURRENTLY (the CLAUDE.md overlap
-            # exception: both sides are strings of scheduler-latency-
-            # bound jobs over a slice-sized index, so overlap saves their
-            # fixed per-job overhead; guide §2.6 overlap-independent-jobs).
-            def _run_incremental() -> bool:
-                inc = idx.topk(k=1, n_probe=None).select(
-                    "vec_id", F.col("neighbor_id").alias("inc_n"))
-                # exactness reference in ONE job: driver-broadcast brute
-                # force over the slice (slice-sized collect, bounded)
-                ref = brute_force_topk(sub, sub, "vec_id", "embedding",
-                                       k=1).select(
-                    "vec_id", F.col("neighbor_id").alias("ref_n"))
-                return _equality_ok(ref, inc, "ref_n", "inc_n")
-
-            def _run_search() -> bool:
-                # external-query verb against the SAME persisted index: re-id
-                # a sub-slice (disjoint id namespace) and full-probe search it
-                # — exact, so equality vs brute force with exclude_self=False
-                qext = (sub.filter(F.pmod(F.col("vec_id"), F.lit(4)) == 0)
-                        .select((F.col("vec_id") + F.lit(10_000_000))
-                                .alias("vec_id"), "embedding"))
-                got_s = idx.search(qext, k=1, n_probe=None).select(
-                    "vec_id", F.col("neighbor_id").alias("s_n"))
-                ref_s = brute_force_topk(qext, sub, "vec_id", "embedding", k=1,
-                                         exclude_self=False).select(
-                    "vec_id", F.col("neighbor_id").alias("r_n"))
-                return _equality_ok(ref_s, got_s, "r_n", "s_n")
-
-            inc_t, srch_t = ex.submit(_run_incremental), ex.submit(_run_search)
-            incremental_ok, search_ok = inc_t.result(), srch_t.result()
-            # removal verb against the SAME persisted index (runs LAST — it
-            # changes the contents): tombstone a slice, then full-probe topk
-            # must equal brute force over the SURVIVORS — deleted ids gone
-            # as queries and as neighbors, straight off the read-time mask
-            idx.delete(sub.filter(F.pmod(F.col("vec_id"), F.lit(10)) == 0)
-                       .select("vec_id"), "purge-0")
-            surv = sub.filter(F.pmod(F.col("vec_id"), F.lit(10)) != 0)
-            got_d = idx.topk(k=1, n_probe=None).select(
-                "vec_id", F.col("neighbor_id").alias("d_n"))
-            ref_d = brute_force_topk(surv, surv, "vec_id", "embedding",
-                                     k=1).select(
-                "vec_id", F.col("neighbor_id").alias("rd_n"))
-            delete_ok = _equality_ok(ref_d, got_d, "rd_n", "d_n")
+        idx = IvfIndex(spark, f"{scratch}/ivf", "vec_id", "embedding")
+        idx.append(sub.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 0),
+                   "day-0", n_lists=4)
+        idx.append(sub.filter(F.pmod(F.col("vec_id"), F.lit(2)) == 1),
+                   "day-1", stats=False)  # gate manages no refresh
+        inc = idx.topk(k=1, n_probe=None).select(
+            "vec_id", F.col("neighbor_id").alias("inc_n"))
+        # exactness reference in ONE job: driver-broadcast brute force
+        # over the slice (slice-sized collect, bounded)
+        ref = brute_force_topk(sub, sub, "vec_id", "embedding", k=1).select(
+            "vec_id", F.col("neighbor_id").alias("ref_n"))
+        incremental_ok = _equality_ok(ref, inc, "ref_n", "inc_n")
+        # external-query verb against the SAME persisted index: re-id a
+        # sub-slice (disjoint id namespace) and full-probe search it —
+        # exact, so equality vs brute force with exclude_self=False
+        qext = (sub.filter(F.pmod(F.col("vec_id"), F.lit(4)) == 0)
+                .select((F.col("vec_id") + F.lit(10_000_000))
+                        .alias("vec_id"), "embedding"))
+        got_s = idx.search(qext, k=1, n_probe=None).select(
+            "vec_id", F.col("neighbor_id").alias("s_n"))
+        ref_s = brute_force_topk(qext, sub, "vec_id", "embedding", k=1,
+                                 exclude_self=False).select(
+            "vec_id", F.col("neighbor_id").alias("r_n"))
+        search_ok = _equality_ok(ref_s, got_s, "r_n", "s_n")
+        # removal verb against the SAME persisted index (runs LAST — it
+        # changes the contents): tombstone a slice, then full-probe topk
+        # must equal brute force over the SURVIVORS — deleted ids gone
+        # as queries and as neighbors, straight off the read-time mask
+        idx.delete(sub.filter(F.pmod(F.col("vec_id"), F.lit(10)) == 0)
+                   .select("vec_id"), "purge-0")
+        surv = sub.filter(F.pmod(F.col("vec_id"), F.lit(10)) != 0)
+        got_d = idx.topk(k=1, n_probe=None).select(
+            "vec_id", F.col("neighbor_id").alias("d_n"))
+        ref_d = brute_force_topk(surv, surv, "vec_id", "embedding",
+                                 k=1).select(
+            "vec_id", F.col("neighbor_id").alias("rd_n"))
+        delete_ok = _equality_ok(ref_d, got_d, "rd_n", "d_n")
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
     return (
-        final_t.result()
+        ivf_topk(emb, "vec_id", "embedding", k=1, n_lists=8, n_probe=8)
         .select("vec_id", F.col("neighbor_id").alias("ivf_neighbor"),
                 F.lit(incremental_ok).alias("incremental_ok"),
                 F.lit(search_ok).alias("search_ok"),
@@ -1437,23 +1389,15 @@ def q_media_features_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media_dir = tempfile.mkdtemp(prefix="sas_media_")
     try:
-        # the text-payload feature branch reads only the documents table —
-        # independent of the synthetic media parquet — so its collect runs
-        # CONCURRENTLY with the media generation/write (the CLAUDE.md
-        # overlap exception: two small fixed-overhead Python-stage
-        # jobs; guide §2.6); the rows re-enter the join as a literal frame
-        feats_plan = media_features(
+        feats = media_features(
             docs.select(F.col("doc_id").alias("media_id"),
                         F.encode(F.col("text"), "UTF-8").alias("payload"))
             .repartition(16)
         ).select("media_id", "n_bytes", "sha256",
                  F.round("byte_entropy", 6).alias("byte_entropy"))
-        with ThreadPoolExecutor(1) as ex:
-            feats_t = ex.submit(feats_plan.collect)
-            (docs.select("doc_id").repartition(16)
-             .mapInPandas(make_media, "media_id long, bmp binary, wav binary")
-             .write.mode("overwrite").parquet(media_dir))
-            feats = spark.createDataFrame(feats_t.result(), feats_plan.schema)
+        (docs.select("doc_id").repartition(16)
+         .mapInPandas(make_media, "media_id long, bmp binary, wav binary")
+         .write.mode("overwrite").parquet(media_dir))
         media = spark.read.parquet(media_dir)
 
         img16 = decode_and_resize(
@@ -1656,16 +1600,7 @@ def q_corpus_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                    * F.log2(F.col("_c") / F.col("_n"))), 6
         ).alias("lang_entropy_bits"))
     )
-    # The corpus-stats side (raw documents table) and the planted curation
-    # funnel below are INDEPENDENT subtrees; curate()'s call-time
-    # components loop serializes several scheduler-latency-bound jobs, so
-    # the stats collect runs CONCURRENTLY with it (the CLAUDE.md
-    # overlap exception: both sides are fixed-overhead-bound over
-    # tiny gate data, overlap saves their fixed cost instead of contending
-    # for bandwidth; guide §2.6 overlap-independent-jobs).  The collected
-    # one-row stats then re-enter the final plan via createDataFrame with
-    # the SAME derivation expressions, so values stay bit-identical.
-    stats_plan = base.crossJoin(exact_vocab).crossJoin(vocab).crossJoin(lang_ent)
+    stats = base.crossJoin(exact_vocab).crossJoin(vocab).crossJoin(lang_ent)
     # ---- planted curation funnel through curate() (docstring) ----------
     # Texts are synthesized from doc_id with per-doc-unique vocab, so
     # cross-class similarity is zero by construction and every funnel
@@ -1753,42 +1688,35 @@ def q_corpus_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
         )
     )
-    # leaving the with waits for the stats collect, so a failure anywhere
-    # in the funnel never leaks it into the next query
-    with ThreadPoolExecutor(1) as ex:
-        stats_t = ex.submit(stats_plan.collect)
-        plan = curate(
-            corpus, text_col="text", id_col="uid",
-            lang_allow=["en"], min_quality=0.5, near_threshold=0.8,
-            max_top_2gram_frac=0.9, max_dup_3gram_frac=0.6,
-            splits={"train": 1.0}, seq_len=128)
-        fun = plan.funnel()
+    plan = curate(
+        corpus, text_col="text", id_col="uid",
+        lang_allow=["en"], min_quality=0.5, near_threshold=0.8,
+        max_top_2gram_frac=0.9, max_dup_3gram_frac=0.6,
+        splits={"train": 1.0}, seq_len=128)
+    fun = plan.funnel()
 
-        def stage_docs(s: str):
-            return F.coalesce(
-                F.sum(F.when(F.col("stage") == s, F.col("docs"))),
-                F.lit(0)).cast("long")
+    def stage_docs(s: str):
+        return F.coalesce(
+            F.sum(F.when(F.col("stage") == s, F.col("docs"))),
+            F.lit(0)).cast("long")
 
-        funnel_row = fun.agg(
-            stage_docs("exact_duplicate").alias("funnel_exact_dup"),
-            stage_docs("near_duplicate").alias("funnel_near_dup"),
-            stage_docs("lang").alias("funnel_lang"),
-            stage_docs("low_quality").alias("funnel_low_quality"),
-            stage_docs("repetitive").alias("funnel_repetitive"),
-            stage_docs("kept").alias("funnel_kept_docs"),
-            F.coalesce(F.sum(F.when(F.col("stage") == "kept",
-                                    F.col("tokens"))), F.lit(0))
-            .cast("long").alias("funnel_kept_tokens"),
-        )
-        # last packed sequence index = (total kept tokens - 1) div seq_len —
-        # gates the packing cumsum through the composition too
-        pack_row = plan.train_packing.agg(
-            F.max("end_seq").cast("long").alias("funnel_train_last_seq"))
+    funnel_row = fun.agg(
+        stage_docs("exact_duplicate").alias("funnel_exact_dup"),
+        stage_docs("near_duplicate").alias("funnel_near_dup"),
+        stage_docs("lang").alias("funnel_lang"),
+        stage_docs("low_quality").alias("funnel_low_quality"),
+        stage_docs("repetitive").alias("funnel_repetitive"),
+        stage_docs("kept").alias("funnel_kept_docs"),
+        F.coalesce(F.sum(F.when(F.col("stage") == "kept",
+                                F.col("tokens"))), F.lit(0))
+        .cast("long").alias("funnel_kept_tokens"),
+    )
+    # last packed sequence index = (total kept tokens - 1) div seq_len —
+    # gates the packing cumsum through the composition too
+    pack_row = plan.train_packing.agg(
+        F.max("end_seq").cast("long").alias("funnel_train_last_seq"))
 
-        rse = 1.04 / np.sqrt(2 ** 14)
-        # the stats side finished while curate() ran its call-time jobs;
-        # re-enter it as a one-row literal frame (same values, same schema)
-        stats = spark.createDataFrame(stats_t.result(), stats_plan.schema)
+    rse = 1.04 / np.sqrt(2 ** 14)
     return (
         stats
         .crossJoin(funnel_row).crossJoin(pack_row)
@@ -1907,9 +1835,7 @@ def q_url_canon_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-implements every rule in SQL.  Per-row string equality across two
     engines gates the whole rule set (the exact-dedup key for web corpora;
     north-star analogue: distinct-url counting needs canonical keys)."""
-    # single-file scan at test SFs = ONE task for the per-row
-    # compute below; ensure_parallelism spreads it (no-op at scale)
-    docs = ensure_parallelism(load_table(spark, "documents", sf_dir))
+    docs = load_table(spark, "documents", sf_dir)
     d = F.col("doc_id")
     messy = F.concat(
         F.when(d % 2 == 0, F.lit("HTTP")).otherwise(F.lit("https")),
@@ -2111,26 +2037,13 @@ def q_streaming_sketches_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # has its own checkpoint and state store; they share only the
         # immutable input files.
         dq, dqname = _start_bloom_dedup_drain(spark, ev.schema, shared, dckpt)
-        # while BOTH drains run, compute every drain-INDEPENDENT exact
-        # side (file spread, exact distincts, exact medians) — these read
-        # only the events table / the already-written stream input, so
-        # they overlap the drains' fixed micro-batch machinery for free
-        # (same rationale as overlapping the two drains themselves); the
-        # collected dimension-sized rows re-enter the joins as literal
-        # frames, values unchanged
-        spread = spark.createDataFrame(
-            _stream_file_spread(spark, shared).collect(),
-            "event_type string, n_input_files bigint",
-        )
-        exact_hll_plan = ev.groupBy("event_type").agg(
-            F.countDistinct("user_id").alias("exact_distinct"))
-        exact_hll = spark.createDataFrame(
-            exact_hll_plan.collect(), exact_hll_plan.schema)
-        exq_plan = _exact_quantiles(ev, "event_type", "value",
-                                    {"exact_median": 0.5})
-        exq = spark.createDataFrame(exq_plan.collect(), exq_plan.schema)
         q.awaitTermination()
         dq.awaitTermination()
+        spread = _stream_file_spread(spark, shared)
+        exact_hll = ev.groupBy("event_type").agg(
+            F.countDistinct("user_id").alias("exact_distinct"))
+        exq = _exact_quantiles(ev, "event_type", "value",
+                               {"exact_median": 0.5})
         w = Window.partitionBy("event_type").orderBy(F.desc("batches"))
         final = (
             spark.table(qname).withColumn("_rn", F.row_number().over(w))
@@ -2234,30 +2147,20 @@ def q_token_setops_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.select(F.col("lang").alias("lang_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("lang").alias("lang_b"), F.col("n").alias("n_b"))
-    grid_plan = (
+    grid = (
         sa.crossJoin(sb).filter(F.col("lang_a") < F.col("lang_b"))
         .join(inter, ["lang_a", "lang_b"], "left")
         .withColumn("n_inter", F.coalesce(F.col("n_inter"), F.lit(0)))
     )
-    # the exact side (sizes + pairwise intersections over the cached
-    # distinct set) and the sketch build are independent consumers of the
-    # same cached frame — collect the exact grid CONCURRENTLY with the
-    # build's driver-side pair enumeration (the CLAUDE.md overlap
-    # exception: both are fixed-overhead job strings over the tiny cached
-    # (lang, token) set; guide §2.6).  The pair-cardinality rows re-enter
-    # the final join as a literal frame, values unchanged.
-    with ThreadPoolExecutor(1) as ex:
-        grid_t = ex.submit(grid_plan.collect)
-        # ONE combined build (identical estimates to the separate ops — both
-        # families consume the same xxhash64 values): one scan + one Python
-        # build + one merge instead of two of each.
-        ests = hll_kmv_pairwise_set_ops(dt, "lang", "token", p=p, k=k).select(
-            F.col("key_a").alias("lang_a"), F.col("key_b").alias("lang_b"),
-            F.col("est_union").alias("_hll_union"), "est_intersection",
-            F.col("kmv_union").alias("_kmv_union"),
-            "est_a_minus_b", "est_b_minus_a",
-        )
-        grid = spark.createDataFrame(grid_t.result(), grid_plan.schema)
+    # ONE combined build (identical estimates to the separate ops — both
+    # families consume the same xxhash64 values): one scan + one Python
+    # build + one merge instead of two of each.
+    ests = hll_kmv_pairwise_set_ops(dt, "lang", "token", p=p, k=k).select(
+        F.col("key_a").alias("lang_a"), F.col("key_b").alias("lang_b"),
+        F.col("est_union").alias("_hll_union"), "est_intersection",
+        F.col("kmv_union").alias("_kmv_union"),
+        "est_a_minus_b", "est_b_minus_a",
+    )
     n_union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
     tbound = 4 * rel * n_union + 5
     return (
@@ -2304,33 +2207,22 @@ def q_countsketch_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("l_returnflag").orderBy(
         F.col("cnt").desc(), F.col("l_partkey").asc()
     )
-    top_plan = (cnts.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= 10).drop("rn"))
-    # the exact side (per-key count table -> F2 + top-10 window) and the
-    # sketch build both scan lineitem once and are independent — collect
-    # the exact side CONCURRENTLY with the build's collect (the CLAUDE.md
-    # overlap exception: two small fixed-overhead job strings over
-    # the same cached/page-warm input; guide §2.6).  The key-cardinality
-    # rows re-enter the plan as literal frames, values unchanged.
-    with ThreadPoolExecutor(1) as ex:
-        exact_t = ex.submit(lambda: (f2.collect(), top_plan.collect()))
-        # ONE sketch build serves both capabilities: the same (5 x 2048)
-        # signed-counter table answers the AMS F2 estimate (median of row
-        # sum-of-squares, computed here from the collected bytes — 3 groups x
-        # 80 KB, driver-trivial) and the broadcast point probe.  The previous
-        # shape ran count_sketch_f2 as a SECOND full build over lineitem —
-        # an identical linear sketch, scanned and shuffled twice for no
-        # information gain.
-        built = count_sketch_build(li, ["l_returnflag"], "l_partkey").collect()
-        sketches = {(r["l_returnflag"],): r["sketch"] for r in built}
-        est = spark.createDataFrame(
-            [(k[0], float(CountSketch.from_bytes(v).f2_estimate()))
-             for k, v in sketches.items()],
-            "l_returnflag string, f2_estimate double",
-        )
-        f2_rows_c, top_rows_c = exact_t.result()
-    f2 = spark.createDataFrame(f2_rows_c, f2.schema)
-    top = spark.createDataFrame(top_rows_c, top_plan.schema)
+    top = (cnts.withColumn("rn", F.row_number().over(w))
+           .filter(F.col("rn") <= 10).drop("rn"))
+    # ONE sketch build serves both capabilities: the same (5 x 2048)
+    # signed-counter table answers the AMS F2 estimate (median of row
+    # sum-of-squares, computed here from the collected bytes — 3 groups x
+    # 80 KB, driver-trivial) and the broadcast point probe.  The previous
+    # shape ran count_sketch_f2 as a SECOND full build over lineitem —
+    # an identical linear sketch, scanned and shuffled twice for no
+    # information gain.
+    built = count_sketch_build(li, ["l_returnflag"], "l_partkey").collect()
+    sketches = {(r["l_returnflag"],): r["sketch"] for r in built}
+    est = spark.createDataFrame(
+        [(k[0], float(CountSketch.from_bytes(v).f2_estimate()))
+         for k, v in sketches.items()],
+        "l_returnflag string, f2_estimate double",
+    )
     rel = float(np.sqrt(8.0 / 2048))
     f2_rows = (
         f2.join(est, "l_returnflag")
@@ -2456,12 +2348,9 @@ def q_checkpoint_resume_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # the BASE (uninterrupted) lifecycle and the BROKEN (withheld-
         # partitions) first run write to DIFFERENT checkpoint dirs and
-        # share no state — run them CONCURRENTLY (the CLAUDE.md
-        # overlap exception: both are strings of small fixed-
-        # overhead jobs over the same tiny cached-scan input, so overlap
-        # saves their serial fixed cost; guide §2.6).  The resumed run
-        # stays strictly AFTER the broken run — that ordering IS the
-        # contract under test.
+        # share no state — run them CONCURRENTLY (the CLAUDE.md overlap
+        # exception).  The resumed run stays strictly AFTER the broken
+        # run — that ordering IS the contract under test.
         def _run_base():
             base_ck = SketchCheckpoint(spark, base_dir, "q")
             base = {r["event_type"]: r["approx_distinct"] for r in
@@ -2485,7 +2374,8 @@ def q_checkpoint_resume_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             return broken.completed_partitions()
 
         with ThreadPoolExecutor(2) as ex:
-            base_t, broken_t = ex.submit(_run_base), ex.submit(_run_broken)
+            base_t = ex.submit(inheritable_thread_target(spark)(_run_base))
+            broken_t = ex.submit(inheritable_thread_target(spark)(_run_broken))
             (base, nonempty), reused = base_t.result(), broken_t.result()
         resumed_ck = SketchCheckpoint(spark, broken_dir, "q")
         resumed = {r["event_type"]: r["approx_distinct"] for r in

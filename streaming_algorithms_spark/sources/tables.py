@@ -45,12 +45,6 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names=TABLES,
     return {n: load_table(spark, n, sf_dir, format) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names=TABLES,
-                   format: str = "parquet") -> None:
-    for n in names:
-        load_table(spark, n, sf_dir, format).createOrReplaceTempView(n)
-
-
 def parquet_footer_rows(paths: Sequence[str]) -> int | None:
     """Total row count of LOCAL parquet data from the file footers — a
     driver-side metadata read, no Spark job (guide §1: don't pay a scan

@@ -31,7 +31,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.html_text import render_page
 
@@ -123,9 +122,3 @@ def generate_webpages(spark: SparkSession, n_rows: int, *, n_hosts: int = 1000,
 
 def write_webpages(spark: SparkSession, path: str, n_rows: int, **kw) -> None:
     generate_webpages(spark, n_rows, **kw).write.mode("overwrite").parquet(path)
-
-
-def webpages_with_ns(df: DataFrame) -> DataFrame:
-    """Add a LongType nanosecond column (the reference's u64 ns domain;
-    TimestampType is µs so parity-sensitive ops carry ns as LONG, SURVEY §1.3)."""
-    return df.withColumn("warc_ns", (F.unix_micros("warc_ts") * F.lit(1000)).cast("long"))

@@ -124,7 +124,10 @@ def test_keyless_merge_is_one_single_partition_exchange(spark):
 def test_background_jobs_run_inside_executor_with_blocks():
     """A failing main path must not leak a still-running collect into the
     next timed query: every executor is a with-item (shutdown waits), and
-    no bare thread is started."""
+    no bare thread is started.  Every submitted callable is wrapped by
+    inheritable_thread_target, so its jobs carry the caller's job
+    description and group (a pinned-thread pool thread does not inherit
+    local properties)."""
     import ast
     import inspect
 
@@ -136,9 +139,16 @@ def test_background_jobs_run_inside_executor_with_blocks():
     pools = [node for node in ast.walk(tree)
              if isinstance(node, ast.Call)
              and getattr(node.func, "id", None) == "ThreadPoolExecutor"]
-    assert len(pools) >= 8
     assert all(id(node) in with_items for node in pools)
     assert "threading" not in inspect.getsource(queries)
+    submits = [node for node in ast.walk(tree)
+               if isinstance(node, ast.Call)
+               and getattr(node.func, "attr", None) == "submit"]
+    assert submits
+    for node in submits:
+        assert len(node.args) == 1 and not node.keywords, ast.unparse(node)
+        assert ast.unparse(node.args[0]).startswith(
+            "inheritable_thread_target("), ast.unparse(node)
 
 
 def test_traced_names_resolve():
