@@ -12,27 +12,26 @@ corpus history is never re-read.  Re-running Lloyd is reserved for measured
 distribution DRIFT, and the one corpus-sized rewrite (re-assignment) happens
 only inside ``refresh()``'s compaction.
 
-Layout at ``<path>`` (commit protocol through the ``commit.publish_file``
-seam, same crash-invisibility contract as SketchTable — driver-visible
-filesystem paths; an object store swaps the seam's one function):
+Layout at ``<path>`` — the ``commit.UnitLedger`` protocol (shared with
+SketchTable: unit ids are the exactly-once ledger, ``_BATCH_META.json`` /
+``MANIFEST.json`` are the commit points) plus this index's own units:
 
-- ``TABLE_META.json`` — id/vec columns, pinned at creation.
+- ``TABLE_META.json`` pins the id/vec columns.
 - ``quantizer-<n>/QUANT.json`` — centroids + the creation-time baseline
   assignment cosine; the file IS the quantizer commit point.
 - ``batch-<id>/`` — parquet postings ``(id, vec, list_id, assign_cos)``
-  assigned under the then-latest quantizer, plus ``_BATCH_META.json``
-  (quantizer generation, batch mean assign_cos, drift flag) written last
-  through the seam — the batch commit point.  Duplicate BATCH ids refused
-  (the exactly-once ledger); row-id uniqueness across batches is the
-  CALLER's contract — appending the same vector id in two batches yields
-  two corpus rows, exactly as two parquet appends would.
-- ``compact-<n>/data/`` + ``MANIFEST.json`` — all covered postings
-  re-assigned under one quantizer generation; the manifest is the commit
-  point and lists the batch ids (and absorbed tombstone ids) it covers.
-- ``tomb-<id>/`` — parquet of DELETED row ids plus ``_BATCH_META.json``
-  (the tombstone commit point, same ledger rules as batches).  A live
-  tombstone masks its ids from every read (``postings``/``topk``/
-  ``search``) via a broadcast anti-join — deletion-sized sets, and a
+  assigned under the then-latest quantizer; its ``_BATCH_META.json``
+  records the quantizer generation, batch mean assign_cos and drift flag.
+  Row-id uniqueness across batches is the CALLER's contract — appending
+  the same vector id in two batches yields two corpus rows, exactly as
+  two parquet appends would.
+- ``compact-<n>/data/`` — all covered postings re-assigned under one
+  quantizer generation; ``MANIFEST.json`` also lists the absorbed
+  tombstone ids (``covers_tombs``) and the bucket spec.
+- ``tomb-<id>/`` — parquet of DELETED row ids, a ledger unit like a
+  batch (committed by its ``_BATCH_META.json``).  A live tombstone masks
+  its ids from every read (``postings``/``topk``/``search``) via a
+  broadcast anti-join — deletion-sized sets, and a
   broadcast join preserves the corpus side's clustering so the bucketed
   no-Exchange plan survives.  The next ``refresh()`` applies tombstones
   PHYSICALLY (deleted rows neither shape the re-fit quantizer nor land
@@ -55,9 +54,7 @@ operator's contract is flag-and-report, the caller decides when to pay for
 
 from __future__ import annotations
 
-import json
 import os
-import re
 from typing import Sequence
 
 import numpy as np
@@ -66,10 +63,8 @@ from pyspark.sql import functions as F
 
 from . import commit as _commit
 from .checkpoint import ALGO_VERSION
+from .commit import UnitLedger
 from .sources.tables import parquet_footer_rows
-
-_BATCH_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
-
 
 _INTEGRAL = ("bigint", "int", "smallint", "tinyint")
 
@@ -92,56 +87,26 @@ def _integral_id_expr(df, id_col: str, ctx: str):
             .alias(id_col))
 
 
-class IvfIndex:
+class IvfIndex(UnitLedger):
     """One IVF index over one (id, vector) column pair, maintained across
     ingest batches.  See module docstring for layout and guarantees."""
 
+    KIND = "ivf index"
+    RETRACT_COVERED = ("its rows live in the compaction now; delete() "
+                       "their ids instead")
+
     def __init__(self, spark: SparkSession, path: str, id_col: str,
                  vec_col: str, drift_tol: float = 0.05):
-        self.spark = spark
-        self.path = path
         self.id_col = id_col
         self.vec_col = vec_col
         self.drift_tol = float(drift_tol)
+        super().__init__(spark, path,
+                         {"id_col": id_col, "vec_col": vec_col})
 
     # -- layout helpers ----------------------------------------------------
 
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "TABLE_META.json")
-
-    def _batch_dir(self, batch_id: str) -> str:
-        return os.path.join(self.path, f"batch-{batch_id}")
-
-    def _check_meta(self, write_if_missing: bool) -> None:
-        mp = self._meta_path()
-        if os.path.exists(mp):
-            with open(mp) as f:
-                meta = json.load(f)
-            if [meta["id_col"], meta["vec_col"]] != [self.id_col,
-                                                     self.vec_col]:
-                raise ValueError(
-                    f"ivf index at {self.path!r} is over "
-                    f"({meta['id_col']}, {meta['vec_col']}), not "
-                    f"({self.id_col}, {self.vec_col})")
-        elif write_if_missing:
-            os.makedirs(self.path, exist_ok=True)
-            _commit.commit_json(
-                {"id_col": self.id_col, "vec_col": self.vec_col,
-                 "created_algo_version": ALGO_VERSION}, mp)
-        else:
-            raise ValueError(f"no ivf index at {self.path!r}")
-
     def _quantizers(self) -> list[tuple[int, dict]]:
-        out = []
-        for name in _commit.list_units(self.path):
-            m = re.fullmatch(r"quantizer-(\d+)", name)
-            if not m:
-                continue
-            qf = os.path.join(self.path, name, "QUANT.json")
-            if os.path.exists(qf):
-                with open(qf) as f:
-                    out.append((int(m.group(1)), json.load(f)))
-        return sorted(out)
+        return self._numbered("quantizer-", "QUANT.json")
 
     def latest_quantizer(self) -> tuple[int, np.ndarray, float]:
         """(generation, centroids, baseline mean assign cosine)."""
@@ -151,75 +116,15 @@ class IvfIndex:
         n, q = qs[-1]
         return n, np.asarray(q["centroids"], np.float64), q["baseline_cos"]
 
-    def committed_batches(self) -> list[str]:
-        out = []
-        for name in _commit.list_units(self.path):
-            d = os.path.join(self.path, name)
-            if (name.startswith("batch-")
-                    and os.path.exists(os.path.join(d, "_SUCCESS"))
-                    and os.path.exists(os.path.join(d, "_BATCH_META.json"))):
-                out.append(name[len("batch-"):])
-        return out
-
-    def _tomb_dir(self, tomb_id: str) -> str:
-        return os.path.join(self.path, f"tomb-{tomb_id}")
-
     def committed_tombstones(self) -> list[str]:
-        out = []
-        for name in _commit.list_units(self.path):
-            d = os.path.join(self.path, name)
-            if (name.startswith("tomb-")
-                    and os.path.exists(os.path.join(d, "_SUCCESS"))
-                    and os.path.exists(os.path.join(d,
-                                                    "_BATCH_META.json"))):
-                out.append(name[len("tomb-"):])
-        return out
+        return self._committed("tomb-")
 
     def live_tombstones(
             self, gens: list[tuple[int, dict]] | None = None) -> list[str]:
         """Committed tombstones NOT yet absorbed by the latest compact
         generation — the ones every read must still mask."""
-        if gens is None:
-            gens = self._generations()
-        tombs = self.committed_tombstones()
-        if not gens:
-            return tombs
-        absorbed = set(gens[-1][1].get("covers_tombs", []))
-        return [t for t in tombs if t not in absorbed]
-
-    def _generations(self) -> list[tuple[int, dict]]:
-        gens = []
-        for name in _commit.list_units(self.path):
-            m = re.fullmatch(r"compact-(\d+)", name)
-            if not m:
-                continue
-            mf = os.path.join(self.path, name, "MANIFEST.json")
-            if os.path.exists(mf):
-                with open(mf) as f:
-                    gens.append((int(m.group(1)), json.load(f)))
-        return sorted(gens)
-
-    def live_units(self,
-                   gens: list[tuple[int, dict]] | None = None) -> list[str]:
-        if gens is None:
-            gens = self._generations()
-        batches = self.committed_batches()
-        if not gens:
-            return [f"batch-{b}" for b in batches]
-        n, manifest = gens[-1]
-        covered = set(manifest["covers"])
-        return [f"compact-{n:06d}/data"] + [
-            f"batch-{b}" for b in batches if b not in covered
-        ]
-
-    def _unit_meta(self, unit: str) -> dict:
-        if unit.startswith("compact-"):
-            meta = os.path.join(self.path, unit.split("/")[0],
-                                "MANIFEST.json")
-        else:
-            meta = os.path.join(self.path, unit, "_BATCH_META.json")
-        with open(meta) as f:
-            return json.load(f)
+        absorbed = self._covered("covers_tombs", gens)
+        return [t for t in self.committed_tombstones() if t not in absorbed]
 
     # -- quantizer build ---------------------------------------------------
 
@@ -253,17 +158,8 @@ class IvfIndex:
         (mean_cos recorded as null)."""
         from .operators.similarity import assign_with_centroids, ivf_assign
 
-        if not _BATCH_ID_RE.fullmatch(batch_id):
-            raise ValueError(
-                f"batch_id {batch_id!r} must match {_BATCH_ID_RE.pattern}")
+        target = self._claim("batch-", batch_id)
         self._check_meta(write_if_missing=True)
-        target = self._batch_dir(batch_id)
-        from .sketch_table import reclaim_uncommitted_batch
-        reclaim_uncommitted_batch(target)  # crashed-append retry self-heals
-        if os.path.exists(target):
-            raise ValueError(
-                f"batch {batch_id!r} already exists in {self.path!r} — "
-                "batch ids are the exactly-once ledger")
         src = df.select(
             _integral_id_expr(df, self.id_col, "IvfIndex.append"),
             self.vec_col)
@@ -308,12 +204,10 @@ class IvfIndex:
         else:
             baseline = self.latest_quantizer()[2]
             drift = mean_cos < baseline - self.drift_tol
-        meta = {"batch_id": batch_id, "quantizer_gen": qgen,
-                "rows": n_rows,
-                "mean_cos": None if mean_cos is None else round(mean_cos, 6),
-                "drift": bool(drift), "algo_version": ALGO_VERSION}
-        _commit.commit_json(meta, os.path.join(target, "_BATCH_META.json"))
-        return meta
+        return self._commit_unit(target, {
+            "batch_id": batch_id, "quantizer_gen": qgen, "rows": n_rows,
+            "mean_cos": None if mean_cos is None else round(mean_cos, 6),
+            "drift": bool(drift)})
 
     def delete(self, ids: DataFrame, tomb_id: str) -> dict:
         """Commit ``ids``' rows (the index's id column; extra columns
@@ -328,54 +222,15 @@ class IvfIndex:
         contract (they ride a broadcast): for a corpus-scale purge, run
         ``refresh()`` right after to absorb the mask into the
         compaction."""
-        from .sketch_table import reclaim_uncommitted_batch
-
-        if not _BATCH_ID_RE.fullmatch(tomb_id):
-            raise ValueError(
-                f"tomb_id {tomb_id!r} must match {_BATCH_ID_RE.pattern}")
+        target = self._claim("tomb-", tomb_id, "tombstone")
         self._check_meta(write_if_missing=False)
-        target = self._tomb_dir(tomb_id)
-        reclaim_uncommitted_batch(target)  # crashed-delete retry self-heals
-        if os.path.exists(target):
-            raise ValueError(
-                f"tombstone {tomb_id!r} already exists in {self.path!r} — "
-                "tombstone ids are the exactly-once ledger")
         (ids.select(_integral_id_expr(ids, self.id_col, "IvfIndex.delete"))
             .distinct().write.parquet(target))  # errorifexists
         n_rows = parquet_footer_rows([target])
         if n_rows is None:  # non-local FS / unreadable footer: one tiny job
             n_rows = self.spark.read.parquet(target).count()
-        meta = {"tomb_id": tomb_id, "rows": n_rows,
-                "algo_version": ALGO_VERSION}
-        _commit.commit_json(meta, os.path.join(target, "_BATCH_META.json"))
-        return meta
-
-    def retract(self, batch_id: str) -> None:
-        """Remove a committed-but-not-yet-compacted posting batch — the
-        "that crawl segment was bad" verb, cheaper than ``delete`` (no
-        id list, no read-time mask: the rows vanish with the unit).  A
-        batch covered by a compact generation is already rewritten into
-        it — use ``delete`` with its ids instead.  Reverse-commit
-        protocol shared with SketchTable.retract: one atomic unlink of
-        ``_BATCH_META.json`` uncommits the batch, data files are
-        cleanup, a crash mid-cleanup leaves a self-healing orphan, and
-        the batch id is immediately free for a corrected re-append."""
-        import shutil
-
-        gens = self._generations()
-        covered = set(gens[-1][1]["covers"]) if gens else set()
-        if batch_id in covered:
-            raise ValueError(
-                f"batch {batch_id!r} is covered by a compact generation "
-                "— its rows live in the compaction now; delete() their "
-                "ids instead")
-        target = self._batch_dir(batch_id)
-        meta = os.path.join(target, "_BATCH_META.json")
-        if not os.path.exists(meta):
-            raise ValueError(
-                f"no committed batch {batch_id!r} in {self.path!r}")
-        os.remove(meta)       # the reverse commit point
-        shutil.rmtree(target)  # cleanup of an already-orphaned dir
+        return self._commit_unit(target, {"tomb_id": tomb_id,
+                                          "rows": n_rows})
 
     def undelete(self, tomb_id: str) -> None:
         """Reverse-commit an UNABSORBED tombstone — the fat-fingered-
@@ -385,23 +240,12 @@ class IvfIndex:
         re-append the vectors instead.  Same reverse-commit protocol as
         ``retract``: one atomic unlink of the commit marker, then
         cleanup."""
-        import shutil
-
-        gens = self._generations()
-        absorbed = (set(gens[-1][1].get("covers_tombs", []))
-                    if gens else set())
-        if tomb_id in absorbed:
+        if tomb_id in self._covered("covers_tombs"):
             raise ValueError(
                 f"tombstone {tomb_id!r} was absorbed by a compact "
                 "generation — its rows are gone; re-append the vectors "
                 "instead")
-        target = self._tomb_dir(tomb_id)
-        meta = os.path.join(target, "_BATCH_META.json")
-        if not os.path.exists(meta):
-            raise ValueError(
-                f"no committed tombstone {tomb_id!r} in {self.path!r}")
-        os.remove(meta)       # the reverse commit point
-        shutil.rmtree(target)  # cleanup of an already-orphaned dir
+        self._uncommit("tomb-", tomb_id, "tombstone")
 
     def _apply_tombstones(self, df: DataFrame,
                           tombs: Sequence[str]) -> DataFrame:
@@ -449,13 +293,7 @@ class IvfIndex:
             tombs)  # deleted rows neither shape the re-fit nor survive it
         cent = _lloyd_refine_distributed(rows, self.vec_col, cent,
                                          lloyd_iters)
-        n = gens[-1][0] + 1 if gens else 0
-        gen_dir = os.path.join(self.path, f"compact-{n:06d}")
-        if (os.path.isdir(gen_dir)
-                and not os.path.exists(os.path.join(gen_dir,
-                                                    "MANIFEST.json"))):
-            import shutil
-            shutil.rmtree(gen_dir)  # reclaim a crashed predecessor
+        n, gen_dir = self._open_generation(gens)
         assigned = assign_with_centroids(rows, self.vec_col, cent,
                                          with_cos=True)
         data_dir = os.path.join(gen_dir, "data")
@@ -496,58 +334,37 @@ class IvfIndex:
             new_baseline = float(obs.get["mean_cos"] or 0.0)
         qgen_new = qgen_old + 1
         self._commit_quantizer(qgen_new, cent, baseline_cos=new_baseline)
-        merged_batches = {u[len("batch-"):] for u in units
-                          if u.startswith("batch-")}
-        prior = set(gens[-1][1]["covers"]) if gens else set()
-        prior_tombs = (set(gens[-1][1].get("covers_tombs", []))
-                       if gens else set())
-        _commit.commit_json(
-            {"covers": sorted(prior | merged_batches),
-             "covers_tombs": sorted(prior_tombs | set(tombs)),
-             "quantizer_gen": qgen_new, "bucket": bucket_spec,
-             "algo_version": ALGO_VERSION},
-            os.path.join(gen_dir, "MANIFEST.json"))
-        return f"compact-{n:06d}"
+        return self._commit_generation(
+            gen_dir, gens, units,
+            covers_tombs=sorted(self._covered("covers_tombs", gens)
+                                | set(tombs)),
+            quantizer_gen=qgen_new, bucket=bucket_spec)
 
-    def vacuum(self) -> list[str]:
-        """Delete units subsumed by the latest compact generation (covered
-        batch dirs, older compacts, and quantizer generations below the
-        latest manifest's) — safe any time after the manifest commit.
-        Returns what it removed."""
-        import shutil
-
-        gens = self._generations()
+    def _subsumed(self, gens: list[tuple[int, dict]]) -> list[str]:
+        """Also quantizer generations below the latest manifest's and the
+        tombstones it absorbed."""
         if not gens:
             return []
-        latest_n, manifest = gens[-1]
-        covered = set(manifest["covers"])
-        keep_qgen = manifest["quantizer_gen"]
-        removed = []
-        for b in self.committed_batches():
-            if b in covered:
-                shutil.rmtree(self._batch_dir(b))
-                removed.append(f"batch-{b}")
-        for n, _ in gens[:-1]:
-            shutil.rmtree(os.path.join(self.path, f"compact-{n:06d}"))
-            self.spark.sql(
-                f"DROP TABLE IF EXISTS {self._bucket_table_name(n)}")
-            removed.append(f"compact-{n:06d}")
-        for qn, _ in self._quantizers():
-            if qn < keep_qgen:
-                shutil.rmtree(os.path.join(self.path, f"quantizer-{qn}"))
-                removed.append(f"quantizer-{qn}")
-        absorbed = set(manifest.get("covers_tombs", []))
-        for t in self.committed_tombstones():
-            if t in absorbed:
-                shutil.rmtree(self._tomb_dir(t))
-                removed.append(f"tomb-{t}")
+        keep_qgen = gens[-1][1]["quantizer_gen"]
+        absorbed = self._covered("covers_tombs", gens)
+        return (super()._subsumed(gens)
+                + [f"quantizer-{qn}" for qn, _ in self._quantizers()
+                   if qn < keep_qgen]
+                + [f"tomb-{t}" for t in self.committed_tombstones()
+                   if t in absorbed])
+
+    def vacuum(self) -> list[str]:
+        """The ledger's vacuum, then drop the catalog bucket tables of the
+        removed compact generations."""
+        removed = super().vacuum()
+        for unit in removed:
+            if unit.startswith("compact-"):
+                n = int(unit[len("compact-"):])
+                self.spark.sql(
+                    f"DROP TABLE IF EXISTS {self._bucket_table_name(n)}")
         return removed
 
     # -- read path ---------------------------------------------------------
-
-    def _read_units(self, units: Sequence[str]) -> DataFrame:
-        paths = [os.path.join(self.path, u) for u in units]
-        return self.spark.read.parquet(*paths)
 
     def postings(self) -> DataFrame:
         """Live (id, vec, list_id) rows, list-routed under the LATEST

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sketch_agg import ensure_parallelism
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -213,25 +215,6 @@ def exact_jaccard_for_pairs(df: DataFrame, pairs: DataFrame, id_col: str,
     )
 
 
-def _spread_python_stage(df: DataFrame) -> DataFrame:
-    """Round-robin repartition a narrow (id, hashes) projection up to the
-    session's shuffle parallelism when the upstream scan has fewer
-    partitions — vectorized Python stages are CPU-bound, and a few-file
-    parquet input would otherwise run them on one worker.  No-op when the
-    scan is already as parallel as the session (the 100 TB case: thousands
-    of input splits).  Partition counts come from file-split math, never
-    ``df.rdd`` (no per-query RDD conversion)."""
-    from .sketch_agg import estimate_scan_partitions
-
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    est = estimate_scan_partitions(df)
-    if est is None:
-        est = df.rdd.getNumPartitions()  # in-memory frames (tests) only
-    if est >= n_parts:
-        return df
-    return df.repartition(n_parts)
-
-
 def _shingle_hash_df(df: DataFrame, id_col: str, text_col: str,
                      shingle_n: int) -> DataFrame:
     """(id, _sh: array<long>) of DISTINCT word-shingle hashes — pure
@@ -302,7 +285,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                 yield pd.DataFrame({id_col: ids[lo:hi],
                                     "signature": list(sigs)})
 
-    src = _spread_python_stage(df.select(id_col, text_col))
+    src = ensure_parallelism(df.select(id_col, text_col))
     prepped = _shingle_hash_df(src, id_col, text_col, shingle_n)
     return prepped.mapInPandas(gen, out_schema)
 
@@ -411,7 +394,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
                 yield pd.DataFrame({id_col: ids[lo:hi],
                                     "simhash": fp.astype(np.int64)})
 
-    src = _spread_python_stage(df.select(id_col, text_col))
+    src = ensure_parallelism(df.select(id_col, text_col))
     # coalesce NULL text to '' JVM-side: split/transform of NULL yields a
     # NULL array, which would reach the Python stage as None and crash it
     prepped = src.select(

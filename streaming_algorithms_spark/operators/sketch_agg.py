@@ -350,12 +350,12 @@ def sketch_rollup(df: DataFrame, keys: Sequence[str], factory,
 MAX_AUTO_PAIR_KEYS = 512
 
 
-def _enumerate_all_pairs(merged: DataFrame, key_col: str, op: str) -> list:
+def _enumerate_all_pairs(keys: DataFrame, key_col: str, op: str) -> list:
     """Driver-side all-pairs enumeration with the documented cardinality
     guard.  The collect itself is LIMIT-bounded to cap+1 rows, so a
     high-cardinality key blows up in this error message — never in driver
     memory first."""
-    rows = merged.select(key_col).limit(MAX_AUTO_PAIR_KEYS + 1).collect()
+    rows = keys.select(key_col).limit(MAX_AUTO_PAIR_KEYS + 1).collect()
     if len(rows) > MAX_AUTO_PAIR_KEYS:
         raise ValueError(
             f"{op}: more than {MAX_AUTO_PAIR_KEYS} distinct {key_col!r} "
@@ -374,22 +374,24 @@ def _pairwise_sketch_estimates(df: DataFrame, key_col: str, col: str,
                                pairs: Sequence[tuple] = None,
                                col_is_hash: bool = False) -> DataFrame:
     """Shared scaffold for every pairwise set-algebra operator: one hashed
-    scan -> per-key partial sketches -> merged rows (cached: consumed by
-    both sides of the pair join and the key enumeration) -> capped pair
-    enumeration -> (key_a, key_b) double join -> Arrow-batch pair
-    estimator.  ``pair_record(A, B)`` maps two deserialized sketches to
-    the value tuple matching ``out_value_schema``.  The 100-TB shape is
-    the scaffold's whole point: one corpus scan + O(pairs) register/tag
-    merges, never a second scan."""
+    scan -> per-key partial sketches -> merged rows -> (key_a, key_b)
+    double join -> Arrow-batch pair estimator.  ``pair_record(A, B)`` maps
+    two deserialized sketches to the value tuple matching
+    ``out_value_schema``.  The 100-TB shape is the scaffold's whole
+    point: one sketch-building corpus scan + O(pairs) register/tag
+    merges.  The capped all-pairs enumeration reads the key column alone
+    (a JVM distinct, no Python), so nothing is cached or left cached.
+    """
     df = df.filter(F.col(col).isNotNull() & F.col(key_col).isNotNull())
     hcol = F.col(col) if col_is_hash else F.xxhash64(col)
     hashed = ensure_parallelism(df.select(F.col(key_col), hcol.alias("_h")))
     partials = build_partials(hashed, [key_col], factory, update)
-    merged = merge_partials(partials, [key_col], from_bytes).cache()
+    merged = merge_partials(partials, [key_col], from_bytes)
     spark = df.sparkSession
     kt = df.schema[key_col].dataType.simpleString()
     if pairs is None:
-        pairs = _enumerate_all_pairs(merged, key_col, op_name)
+        pairs = _enumerate_all_pairs(df.select(key_col).distinct(), key_col,
+                                     op_name)
     pairs_df = spark.createDataFrame(list(pairs), f"key_a {kt}, key_b {kt}")
     sa = merged.select(F.col(key_col).alias("key_a"),
                        F.col("sketch").alias("_ska"))

@@ -52,6 +52,16 @@ from ..sources.tables import load_table, parquet_footer_rows
 # ---------------------------------------------------------------------------
 
 
+def _hll_ok(approx: str, exact: str):
+    """The HLL gates' bound: ``|approx - exact|`` within 3 published
+    standard errors (1.04/sqrt(2^p) relative, p=14 in every gate) of
+    ``exact``, floored at 3 so small groups are not held to a sub-unit
+    error."""
+    rse = 1.04 / np.sqrt(2 ** 14)
+    return (F.abs(F.col(approx) - F.col(exact))
+            <= F.greatest(3 * rse * F.col(exact), F.lit(3.0)))
+
+
 def q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approx distinct user_id per event_type (HLL p=14) vs exact.
 
@@ -126,17 +136,13 @@ def q_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         src.unpersist()
         shutil.rmtree(scratch, ignore_errors=True)
 
-    rse = 1.04 / np.sqrt(2 ** 14)
     return (
         exact.join(est, "event_type")
         .join(inc, "event_type")
         .select(
             "event_type",
             "exact_distinct",
-            (
-                F.abs(F.col("approx_distinct") - F.col("exact_distinct"))
-                <= F.greatest(3 * rse * F.col("exact_distinct"), F.lit(3.0))
-            ).alias("hll_ok"),
+            _hll_ok("approx_distinct", "exact_distinct").alias("hll_ok"),
             (F.col("incremental_distinct") == F.col("approx_distinct"))
             .alias("incremental_ok"),
         )
@@ -576,17 +582,13 @@ def q_token_sketch_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = toks.groupBy("lang").agg(
         F.countDistinct("token").alias("exact_distinct_tokens"),
     )
-    rse = 1.04 / np.sqrt(2 ** 14)
     return (
         exact.join(sk, "lang")
         .select(
             "lang",
             "exact_distinct_tokens",
             "total_tokens",
-            (
-                F.abs(F.col("distinct_tokens") - F.col("exact_distinct_tokens"))
-                <= F.greatest(3 * rse * F.col("exact_distinct_tokens"), F.lit(3.0))
-            ).alias("hll_ok"),
+            _hll_ok("distinct_tokens", "exact_distinct_tokens").alias("hll_ok"),
         )
         .orderBy("lang")
     )
@@ -652,15 +654,11 @@ def q_hll_hierarchy_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = docs.groupBy("lang", "source").agg(
         F.countDistinct("text").alias("exact_distinct")
     )
-    rse = 1.04 / np.sqrt(2 ** 14)
     return (
         exact.join(est, ["lang", "source"])
         .select(
             "lang", "source", "exact_distinct",
-            (
-                F.abs(F.col("approx_distinct") - F.col("exact_distinct"))
-                <= F.greatest(3 * rse * F.col("exact_distinct"), F.lit(3.0))
-            ).alias("hll_ok"),
+            _hll_ok("approx_distinct", "exact_distinct").alias("hll_ok"),
         )
         .orderBy("lang", "source")
     )
@@ -678,7 +676,6 @@ def q_dup_pct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.countDistinct("user_id").alias("exact_distinct"),
     )
-    rse = 1.04 / np.sqrt(2 ** 14)
     return (
         exact.join(est, "day")
         .select(
@@ -688,10 +685,7 @@ def q_dup_pct_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("n_events") - F.col("exact_distinct"))
                 / F.col("n_events") * 100, 4
             ).alias("dup_pct"),
-            (
-                F.abs(F.col("approx_distinct") - F.col("exact_distinct"))
-                <= F.greatest(3 * rse * F.col("exact_distinct"), F.lit(3.0))
-            ).alias("hll_ok"),
+            _hll_ok("approx_distinct", "exact_distinct").alias("hll_ok"),
         )
         .orderBy("day")
     )
@@ -1543,16 +1537,12 @@ def q_salted_hll_tokens_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     exact = toks.groupBy("lang").agg(
         F.countDistinct("token").alias("exact_distinct")
     )
-    rse = 1.04 / np.sqrt(2 ** 14)
     return (
         exact.join(est, "lang")
         .select(
             "lang",
             "exact_distinct",
-            (
-                F.abs(F.col("approx_distinct") - F.col("exact_distinct"))
-                <= F.greatest(3 * rse * F.col("exact_distinct"), F.lit(3.0))
-            ).alias("hll_ok"),
+            _hll_ok("approx_distinct", "exact_distinct").alias("hll_ok"),
         )
         .orderBy("lang")
     )
@@ -1716,7 +1706,6 @@ def q_corpus_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     pack_row = plan.train_packing.agg(
         F.max("end_seq").cast("long").alias("funnel_train_last_seq"))
 
-    rse = 1.04 / np.sqrt(2 ** 14)
     return (
         stats
         .crossJoin(funnel_row).crossJoin(pack_row)
@@ -1724,9 +1713,7 @@ def q_corpus_card_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs",
             "total_tokens",
             "exact_vocab",
-            (F.abs(F.col("approx_distinct") - F.col("exact_vocab"))
-             <= F.greatest(3 * rse * F.col("exact_vocab"), F.lit(3.0))
-             ).alias("vocab_hll_ok"),
+            _hll_ok("approx_distinct", "exact_vocab").alias("vocab_hll_ok"),
             F.round(1.0 - F.col("distinct_texts") / F.col("n_docs"), 6)
              .alias("dup_doc_rate"),
             "lang_entropy_bits",
@@ -2052,7 +2039,6 @@ def q_streaming_sketches_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         mb_ok = (F.col("batches")
                  >= F.least(F.lit(2), F.col("n_input_files")))
-        rse = 1.04 / np.sqrt(2 ** 14)
         hll = (
             exact_hll
             .join(final, "event_type")
@@ -2061,11 +2047,7 @@ def q_streaming_sketches_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("hll_distinct").alias("metric"),
                 F.col("event_type").alias("grp"),
                 F.col("exact_distinct").cast("double").alias("exact_value"),
-                (
-                    F.abs(F.col("approx_distinct") - F.col("exact_distinct"))
-                    <= F.greatest(3 * rse * F.col("exact_distinct"),
-                                  F.lit(3.0))
-                ).alias("ok_a"),
+                _hll_ok("approx_distinct", "exact_distinct").alias("ok_a"),
                 mb_ok.alias("ok_b"),
             )
         )
@@ -2135,7 +2117,7 @@ def q_token_setops_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rel = 1.0 / np.sqrt(k - 2)
     docs = load_table(spark, "documents", sf_dir)
     toks = docs.select("lang", F.explode(fn.tokens(F.col("text"))).alias("token"))
-    dt = toks.distinct().cache()
+    dt = toks.distinct()
     sizes = dt.groupBy("lang").agg(F.count("*").alias("n"))
     a = dt.alias("a")
     b = dt.alias("b")
@@ -2200,7 +2182,7 @@ def q_countsketch_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
     cnts = li.groupBy("l_returnflag", "l_partkey").agg(
         F.count("*").alias("cnt")
-    ).cache()
+    )
     f2 = cnts.groupBy("l_returnflag").agg(
         F.sum(F.col("cnt") * F.col("cnt")).alias("f2")
     )
@@ -2398,16 +2380,12 @@ def q_checkpoint_resume_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = load_table(spark, "events", sf_dir).groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_distinct")
     )
-    rse = 1.04 / np.sqrt(2 ** 14)
     return (
         exact.join(est, "event_type")
         .select(
             "event_type",
             "exact_distinct",
-            (
-                F.abs(F.col("_resumed") - F.col("exact_distinct"))
-                <= F.greatest(3 * rse * F.col("exact_distinct"), F.lit(3.0))
-            ).alias("hll_ok"),
+            _hll_ok("_resumed", "exact_distinct").alias("hll_ok"),
             (F.col("_resumed") == F.col("_base")).alias("resume_matches_ok"),
             F.lit(reused_ok).alias("partials_reused_ok"),
         )

@@ -23,29 +23,13 @@ monoid with an associative byte-stable ``merge``) makes exact:
         accumulate.  Associativity makes compacted estimates
         byte-identical to merging the raw batch rows.
 
-Commit protocol (mini table-format semantics — same honesty bar as
-sources/warc.py's task-commit story).  Metadata commits go through the
-``commit.publish_file`` seam: on THIS implementation that is driver-local
-``os.replace`` plus ``os.listdir`` discovery, so the table path must be a
-filesystem visible to the driver (local disk / NFS); an object-store
-deployment swaps the seam's TWO functions — ``commit.publish_file`` for
-the store's atomic primitive and ``commit.list_units`` (every reader's
-unit enumeration routes through it) for its list API — the protocol design
-(what is written before the swap, what a reader treats as committed) is
-already store-shaped and fault-injection-tested through the seam:
-
-- An append writes ``<path>/batch-<id>/`` via Spark parquet; the batch
-  is live only once its ``_SUCCESS`` lands.  A failed/partial append is
-  invisible.  Duplicate batch ids are refused (exactly-once per id —
-  the caller's ingest ledger names batches deterministically).
-- A compaction writes ``<path>/compact-<n>/data/`` then atomically
-  renames ``MANIFEST.json`` into place; the manifest IS the commit
-  point and lists every batch id the generation covers.  Readers use
-  the highest manifest-committed generation plus batches it does not
-  cover; a crashed compaction leaves no manifest and is ignored.
-- ``vacuum()`` deletes units subsumed by the latest generation — safe
-  any time after the manifest commit; until then history remains
-  readable (time-travel to pre-compact state by reading batch dirs).
+Commit protocol: ``commit.UnitLedger``, which this class subclasses (and
+``IvfIndex`` too) — one ``batch-<id>/`` unit per append, committed by its
+``_BATCH_META.json``; one ``compact-<n>/`` generation per compaction,
+committed by its ``MANIFEST.json``; ``retract``/``vacuum`` as the ledger
+defines them.  All of it goes through the ``commit.publish_file`` /
+``commit.list_units`` seam, so the table path must be a filesystem
+visible to the driver unless an object-store deployment swaps the seam.
 
 Version fencing: every unit's commit metadata (``_BATCH_META.json`` /
 ``MANIFEST.json``) records the ``algo_version`` (checkpoint.py's
@@ -61,39 +45,18 @@ against hand-copied foreign files.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import commit as _commit
 from .checkpoint import ALGO_VERSION
+from .commit import UnitLedger
 from .operators import sketch_agg
 
-_BATCH_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
 
-
-def reclaim_uncommitted_batch(target: str) -> None:
-    """A batch dir WITHOUT ``_BATCH_META.json`` is an uncommitted orphan
-    (the meta commit, written last through the seam, IS the batch commit
-    point — a crash anywhere earlier leaves the dir meta-less and
-    invisible to readers): remove it so the same logical writer's retry
-    self-heals instead of colliding on "already exists" forever —
-    mirroring ``compact()``'s manifest-less-orphan reclaim.  Two LIVE
-    writers sharing a batch id are outside the ledger contract (ids are
-    exactly-once; the parquet errorifexists race guard still covers the
-    window after reclaim)."""
-    if (os.path.isdir(target)
-            and not os.path.exists(os.path.join(target,
-                                                "_BATCH_META.json"))):
-        import shutil
-        shutil.rmtree(target)
-
-
-class SketchTable:
+class SketchTable(UnitLedger):
     """One sketch family over one key set, maintained across ingest batches.
 
     The sketch callables (``factory/update/from_bytes/finalize``) follow
@@ -105,80 +68,12 @@ class SketchTable:
     layouts into one table.
     """
 
+    KIND = "sketch table"
+    RETRACT_COVERED = "sketch merges are not invertible; rebuild instead"
+
     def __init__(self, spark: SparkSession, path: str, keys: Sequence[str]):
-        self.spark = spark
-        self.path = path
         self.keys = list(keys)
-
-    # -- layout helpers ----------------------------------------------------
-
-    def _meta_path(self) -> str:
-        return os.path.join(self.path, "TABLE_META.json")
-
-    def _batch_dir(self, batch_id: str) -> str:
-        return os.path.join(self.path, f"batch-{batch_id}")
-
-    def _check_meta(self, write_if_missing: bool) -> None:
-        mp = self._meta_path()
-        if os.path.exists(mp):
-            with open(mp) as f:
-                meta = json.load(f)
-            if meta["keys"] != self.keys:
-                raise ValueError(
-                    f"sketch table at {self.path!r} is keyed by "
-                    f"{meta['keys']}, not {self.keys} — one table, one "
-                    "key layout"
-                )
-        elif write_if_missing:
-            os.makedirs(self.path, exist_ok=True)
-            _commit.commit_json({"keys": self.keys,
-                                 "created_algo_version": ALGO_VERSION}, mp)
-        else:
-            raise ValueError(f"no sketch table at {self.path!r}")
-
-    def committed_batches(self) -> list[str]:
-        """Batch ids whose append fully committed: Spark's ``_SUCCESS``
-        AND the append's own ``_BATCH_META.json`` (written after, via
-        atomic rename — the batch-level commit point carrying the
-        version stamp).  A dir missing either is a crashed append."""
-        out = []
-        for name in _commit.list_units(self.path):
-            d = os.path.join(self.path, name)
-            if (name.startswith("batch-")
-                    and os.path.exists(os.path.join(d, "_SUCCESS"))
-                    and os.path.exists(os.path.join(d, "_BATCH_META.json"))):
-                out.append(name[len("batch-"):])
-        return out
-
-    def _generations(self) -> list[tuple[int, dict]]:
-        """(n, manifest) for every manifest-committed compact generation."""
-        gens = []
-        for name in _commit.list_units(self.path):
-            m = re.fullmatch(r"compact-(\d+)", name)
-            if not m:
-                continue
-            mf = os.path.join(self.path, name, "MANIFEST.json")
-            if os.path.exists(mf):
-                with open(mf) as f:
-                    gens.append((int(m.group(1)), json.load(f)))
-        return sorted(gens)
-
-    def live_units(self, gens: list[tuple[int, dict]] | None = None) -> list[str]:
-        """Relative dirs a reader merges: latest committed generation +
-        every committed batch it does not cover.  Pass ``gens`` (a
-        ``_generations()`` snapshot) to pin units/covers/n to ONE listing —
-        compact() does, so a generation committed by a concurrent writer
-        between two listings can't yield an inconsistent view."""
-        if gens is None:
-            gens = self._generations()
-        batches = self.committed_batches()
-        if not gens:
-            return [f"batch-{b}" for b in batches]
-        n, manifest = gens[-1]
-        covered = set(manifest["covers"])
-        return [f"compact-{n:06d}/data"] + [
-            f"batch-{b}" for b in batches if b not in covered
-        ]
+        super().__init__(spark, path, {"keys": self.keys})
 
     # -- write path --------------------------------------------------------
 
@@ -190,29 +85,16 @@ class SketchTable:
         ``batch-<batch_id>``.  One row per (input partition, key); rows
         carry lineage (partition_id, wall_ms) so ``lineage_metrics``
         works per batch, and ``algo_version`` for the fence."""
-        if not _BATCH_ID_RE.fullmatch(batch_id):
-            raise ValueError(
-                f"batch_id {batch_id!r} must match {_BATCH_ID_RE.pattern}"
-            )
+        target = self._claim("batch-", batch_id)
         self._check_meta(write_if_missing=True)
-        target = self._batch_dir(batch_id)
-        reclaim_uncommitted_batch(target)
-        if os.path.exists(target):
-            raise ValueError(
-                f"batch {batch_id!r} already exists in {self.path!r} — "
-                "batch ids are the exactly-once ledger; pick a new id or "
-                "remove the old batch first"
-            )
         partials = sketch_agg.build_partials(
             df, self.keys, factory, update
         ).withColumns({"query_id": F.lit(batch_id),
                        "algo_version": F.lit(ALGO_VERSION)})
         # errorifexists (default mode): two concurrent appends with the
-        # same id race at the FS layer too, not just the check above.
+        # same id race at the FS layer too, not just the claim above.
         partials.write.parquet(target)
-        _commit.commit_json(  # the batch-level commit point
-            {"batch_id": batch_id, "algo_version": ALGO_VERSION},
-            os.path.join(target, "_BATCH_META.json"))
+        self._commit_unit(target, {"batch_id": batch_id})
 
     def append_many(self, df: DataFrame, batch_col: str,
                     batch_ids: Sequence[str],
@@ -235,16 +117,7 @@ class SketchTable:
         batch_ids = list(batch_ids)
         if len(set(batch_ids)) != len(batch_ids):
             raise ValueError("duplicate ids in batch_ids")
-        for b in batch_ids:
-            if not _BATCH_ID_RE.fullmatch(b):
-                raise ValueError(
-                    f"batch_id {b!r} must match {_BATCH_ID_RE.pattern}")
-            reclaim_uncommitted_batch(self._batch_dir(b))
-            if os.path.exists(self._batch_dir(b)):
-                raise ValueError(
-                    f"batch {b!r} already exists in {self.path!r} — "
-                    "batch ids are the exactly-once ledger; pick a new id "
-                    "or remove the old batch first")
+        targets = [self._claim("batch-", b) for b in batch_ids]
         self._check_meta(write_if_missing=True)
         partials = sketch_agg.build_partials(
             df, [batch_col] + self.keys, factory, update
@@ -262,14 +135,11 @@ class SketchTable:
                 raise ValueError(
                     f"{batch_col!r} values {unknown} are not in batch_ids "
                     "— every row must belong to a declared batch")
-            for b in batch_ids:
-                target = self._batch_dir(b)
+            for b, target in zip(batch_ids, targets):
                 slice_ = partials.filter(
                     F.col(batch_col) == b).drop(batch_col)
                 slice_.write.parquet(target)  # errorifexists: FS-level race
-                _commit.commit_json(
-                    {"batch_id": b, "algo_version": ALGO_VERSION},
-                    os.path.join(target, "_BATCH_META.json"))
+                self._commit_unit(target, {"batch_id": b})
         finally:
             partials.unpersist()
 
@@ -293,110 +163,23 @@ class SketchTable:
             "query_id": F.lit("compact"),
             "algo_version": F.lit(ALGO_VERSION),
         })
-        n = gens[-1][0] + 1 if gens else 0
-        gen_dir = os.path.join(self.path, f"compact-{n:06d}")
-        # reclaim a crashed predecessor: a compact dir WITHOUT a manifest
-        # is an uncommitted orphan (invisible to readers) left by a
-        # compaction that died between the data write and the manifest
-        # rename — without this, the retry collides on the same
-        # generation number forever.  A dir WITH a manifest can't be at
-        # this n (numbering is past-the-latest-committed).
-        if (os.path.isdir(gen_dir)
-                and not os.path.exists(os.path.join(gen_dir,
-                                                    "MANIFEST.json"))):
-            import shutil
-            shutil.rmtree(gen_dir)
+        _, gen_dir = self._open_generation(gens)
         merged.write.parquet(os.path.join(gen_dir, "data"))
-        # covers derives from the UNITS ACTUALLY MERGED above, never from a
-        # fresh directory listing: a batch committed by a concurrent append
-        # after the merge read must stay uncovered (its rows aren't in this
-        # generation), or its data would silently vanish from reads.
-        merged_batches = {u[len("batch-"):] for u in units
-                          if u.startswith("batch-")}
-        prior = set(gens[-1][1]["covers"]) if gens else set()
-        covers = sorted(prior | merged_batches)
-        _commit.commit_json(  # the generation-level commit point
-            {"covers": covers, "algo_version": ALGO_VERSION},
-            os.path.join(gen_dir, "MANIFEST.json"))
-        return f"compact-{n:06d}"
-
-    def retract(self, batch_id: str) -> None:
-        """Remove a committed-but-not-yet-compacted batch — the "that
-        crawl segment was bad" verb.  A batch already covered by a
-        compact generation is baked into merged sketch rows, and sketch
-        merges are NOT invertible (a monoid, not a group) — retracting
-        it then is impossible; rebuild from surviving sources instead.
-        The commit protocol runs in reverse: unlinking
-        ``_BATCH_META.json`` (one atomic unlink) uncommits the batch —
-        readers treat the dir as an orphan from that instant — and the
-        data files are cleanup; a crash mid-cleanup leaves an orphan
-        that ``reclaim_uncommitted_batch`` self-heals, so the batch id
-        is immediately free for a corrected re-append.  Same
-        single-maintainer window as ``vacuum``: don't race an in-flight
-        read, and don't race an in-flight ``compact()`` — the covered
-        check reads the latest COMMITTED manifest, so a retraction
-        landing between a compaction's merge read and its manifest
-        commit would be silently undone by that manifest."""
-        import shutil
-
-        gens = self._generations()
-        covered = set(gens[-1][1]["covers"]) if gens else set()
-        if batch_id in covered:
-            raise ValueError(
-                f"batch {batch_id!r} is covered by a compact generation "
-                "— sketch merges are not invertible; rebuild instead")
-        target = self._batch_dir(batch_id)
-        meta = os.path.join(target, "_BATCH_META.json")
-        if not os.path.exists(meta):
-            raise ValueError(
-                f"no committed batch {batch_id!r} in {self.path!r}")
-        os.remove(meta)       # the reverse commit point
-        shutil.rmtree(target)  # cleanup of an already-orphaned dir
-
-    def vacuum(self) -> list[str]:
-        """Delete units subsumed by the latest generation (old compacts and
-        covered batch dirs).  Returns what it removed."""
-        import shutil
-
-        gens = self._generations()
-        if not gens:
-            return []
-        latest_n, manifest = gens[-1]
-        covered = set(manifest["covers"])
-        removed = []
-        for b in self.committed_batches():
-            if b in covered:
-                shutil.rmtree(self._batch_dir(b))
-                removed.append(f"batch-{b}")
-        for n, _ in gens[:-1]:
-            shutil.rmtree(os.path.join(self.path, f"compact-{n:06d}"))
-            removed.append(f"compact-{n:06d}")
-        return removed
+        return self._commit_generation(gen_dir, gens, units)
 
     # -- read path ---------------------------------------------------------
 
-    def _read_units(self, units: Sequence[str]) -> DataFrame:
-        paths = [os.path.join(self.path, u) for u in units]
-        return self.spark.read.parquet(*paths)
-
-    def _unit_version(self, unit: str) -> str:
-        if unit.startswith("compact-"):
-            meta = os.path.join(self.path, unit.split("/")[0],
-                                "MANIFEST.json")
-        else:
-            meta = os.path.join(self.path, unit, "_BATCH_META.json")
-        with open(meta) as f:
-            return str(json.load(f)["algo_version"])
-
     def _fence_versions(self, units: Sequence[str]) -> None:
         """Driver-side metadata fence — no Spark job; see module docstring."""
-        stale = [(u, v) for u in units
-                 if (v := self._unit_version(u)) != ALGO_VERSION]
+        versions = {u: str(self._unit_meta(u)["algo_version"])
+                    for u in units}
+        stale = [f"{u}(v{v})" for u, v in versions.items()
+                 if v != ALGO_VERSION]
         if stale:
-            detail = ", ".join(f"{u}(v{v})" for u, v in stale)
             raise ValueError(
                 f"sketch table {self.path!r} holds partials from a "
-                f"different ALGO_VERSION (current {ALGO_VERSION}): {detail}. "
+                f"different ALGO_VERSION (current {ALGO_VERSION}): "
+                f"{', '.join(stale)}. "
                 "Persisted sketches cannot be recomputed from the table — "
                 "re-ingest those batches with the current library, or read "
                 "the table with the version that wrote them."

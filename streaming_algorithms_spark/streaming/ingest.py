@@ -45,10 +45,10 @@ from pyspark.sql.streaming import StreamingQuery
 class AppendRoute:
     """One incremental store fed by the stream.
 
-    ``target`` is anything with the shared ledger protocol:
-    ``committed_batches() -> list[str]`` and ``append(df, batch_id,
-    **kwargs)`` that self-heals crashed (uncommitted) dirs on retry —
-    SketchTable and IvfIndex both qualify.  ``transform`` maps the raw
+    ``target`` is a ``commit.UnitLedger`` store (SketchTable, IvfIndex)
+    or anything with the same protocol: ``committed_batches() ->
+    list[str]`` and an ``append(df, batch_id, **kwargs)`` that self-heals
+    crashed (uncommitted) dirs on retry.  ``transform`` maps the raw
     micro-batch DataFrame to the store's input shape (extract keys,
     compute hashes, project (id, vec)); it runs INSIDE the epoch, so it
     is replayed with the epoch and needs no idempotence of its own.

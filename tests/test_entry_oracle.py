@@ -77,6 +77,23 @@ def test_query_matches_oracle(spark, duck, name):
             assert av == bv, (name, c, av[:5], bv[:5])
 
 
+def test_gates_leave_no_cached_frame(spark):
+    """A gate that caches an intermediate must release it before it
+    returns: a frame left cached pins executor storage for every later
+    query of the session.  Compared as the set of persisted RDDs (a
+    materialized cached frame is one) before and after, since other
+    session-scoped fixtures may hold caches of their own; with none, the
+    session's CacheManager must be empty afterwards."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    for name in ("countsketch_lineitem", "token_setops_langs"):
+        entrymod.queries()[name](spark, SF_DIR).collect()
+        left = set(jsc.getPersistentRDDs().keySet()) - before
+        assert not left, (name, sorted(left))
+    if not before:
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 @pytest.mark.parametrize("name", sorted(set(entrymod.queries()) - set(entrymod.oracle_sql())))
 def test_rows_only_queries_run(spark, name):
     q = entrymod.queries()[name]
